@@ -50,10 +50,9 @@ def _ensure_session_confs(spark: SparkSession) -> None:
 # cache the DuckDB baseline numbers assume (BASELINE.md). On a real
 # cluster, inputs arrive in many splits and this path stays off.
 # Keyed per-session (id() plus an identity check on the stored session,
-# since ids can be recycled): the fan-out keys build from a cloned
-# session (partitioning.fanout_session), and a shared key would make
-# parent and clone evict each other's entries every call. Entries for
-# stopped sessions are dropped opportunistically on insert.
+# since ids can be recycled), so entries built by one session are never
+# handed to another. Entries for stopped sessions are dropped
+# opportunistically on insert.
 _INPUT_CACHE: dict[tuple[int, str, str], tuple[SparkSession, DataFrame]] = {}
 
 # Tables big enough that single-task scans hurt; small dims stay

@@ -6,6 +6,15 @@ MinHash/LSH replaces the O(n²) pairwise scan with per-doc signatures
 SimHash gives a per-doc 16-bit sketch joinable by Hamming bands. Only the
 final *verify* step touches candidate pairs, whose count LSH controls.
 
+MinHash signatures are computed once per ``llm_near_dedup_minhash`` call:
+the band relation is local-checkpointed (non-eager), the candidate
+guard's width profile is the job that fills it, and the band join, the
+guard's drop/audit passes and any re-execution of the result read the
+checkpointed blocks instead of re-running scan → token arrays → 32
+signature HOFs. The MinHash and SimHash signature stages run behind
+``partitioning.spread_to_cores``, so a small corpus that arrives as one
+scan split still computes its signatures on every core.
+
 All hash families are deterministic (seeded by literal band/row indexes)
 — required by the oracle hash-match and by resume semantics.
 """
@@ -19,7 +28,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from flume_hive_batch_sink_spark.io import load
-from flume_hive_batch_sink_spark.partitioning import shuffle_parallelism
+from flume_hive_batch_sink_spark.partitioning import (
+    shuffle_parallelism,
+    spread_to_cores,
+)
 from flume_hive_batch_sink_spark.registry import query
 
 # MinHash/LSH geometry: 32 hash functions = 16 bands × 2 rows.
@@ -201,11 +213,13 @@ def _apply_candidate_budget(
     candidates ≈ 5e-4 of all pairs), which is exactly when dropping
     the widest — least discriminating — buckets is the right trade.
 
-    Cost when the corpus is healthy: one extra linear pass over the
-    bands relation (map-side signatures + a partial-agg'd count) and a
-    1-row collect — no change to the candidate plan. Cost when
-    triggered: + one ≤ _GUARD_TOPK-row collect and a broadcast
-    anti-join. Raises if even dropping the top-K widest buckets cannot
+    Cost when the corpus is healthy: one linear pass over the bands
+    relation (a partial-agg'd count) and a 1-row collect — no change to
+    the candidate plan. llm_near_dedup_minhash passes a non-eager
+    local-checkpointed ``bands``, so this pass is also the one that
+    computes the signatures; the candidate join then reads them back.
+    Cost when triggered: + one ≤ _GUARD_TOPK-row collect and a
+    broadcast anti-join. Raises if even dropping the top-K widest buckets cannot
     meet the budget — at that point the banding operating point itself
     is wrong for the corpus and `llm_lsh_band_sweep` is the
     recalibration tool."""
@@ -563,24 +577,31 @@ def llm_near_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     must reproduce it exactly, which it does because the verify step is
     exact and LSH recall at the threshold is ~1-7e-8 (see module
     constants). Signatures are array expressions over the per-doc token
-    array (map-side, zero shuffles); band joins shuffle only
-    (band_idx, band_key); verify touches candidate pairs only, via
-    codegen array_intersect.
+    array (map-side), computed once per call into a local-checkpointed
+    band relation that the guard profile and the band join share; band
+    joins shuffle only (band_idx, band_key); verify touches candidate
+    pairs only, via codegen array_intersect.
     """
-    # Round-16 note: an AQE-off cloned session (partitioning.
-    # fanout_session) was A/B'd here per VERDICT r15 item 1 and measured
-    # NEUTRAL (8.45 s AQE-on vs 8.72 s off, interleaved medians of 5 at
-    # sf0.1; scripts/probe_fanout_aqe.py). The round-15 "2.4 s with AQE
-    # fully off" figure predated the explicit fan-out repartitions —
-    # once those pin the hot exchanges, AQE's remaining stage barriers
-    # cost nothing measurable, so the session stays untouched.
     docs = load(spark, sf_dir, "documents")
     # per-doc distinct token ARRAY — signatures and verify both work on
-    # the array column, so no token row-explosion or shuffle ever happens
-    # for the linear passes (the 100 TB-relevant change: signature
-    # computation is fully map-side)
+    # the array column, so no token row-explosion happens for the linear
+    # passes
     tok_arr = token_arrays(docs)
-    bands = minhash_bands(tok_arr)
+    # The signature stage is map-side; spread_to_cores adds one
+    # round-robin of the raw rows only when the corpus has fewer splits
+    # than cores (a small corpus is one split, and 32 interpreted HOFs
+    # per doc on one task left the other cores idle).
+    # Signatures are materialized ONCE: without the checkpoint the
+    # guard's eager width profile ran scan → token arrays → signatures,
+    # and the candidate join ran the whole chain again (nothing sat
+    # between them). Non-eager, so the guard's profile job is the one
+    # that fills it (when the guard is off, the candidate join does);
+    # localCheckpoint rather than cache() because the lazy result
+    # DataFrame outlives this function and has no point to unpersist —
+    # the blocks go with the plan (the llm/clusters.py idiom).
+    bands = minhash_bands(token_arrays(spread_to_cores(docs))).localCheckpoint(
+        eager=False
+    )
 
     # Candidate pairs: bucket-mates in any band, deduplicated, with the
     # hot-bucket skew guard (band_candidates docstring — buckets wider
@@ -704,10 +725,6 @@ def llm_jaccard_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact set-similarity join: candidate volume tracks rare-shingle
     collisions, not corpus size².
     """
-    # Round-16: AQE-off clone A/B'd and NEUTRAL here too (2.95 s on vs
-    # 3.06 s off, interleaved medians of 5 at sf0.1) — the round-15
-    # "4.6 vs 2.4 s" gap was measured before the fan-out repartitions
-    # landed and no longer exists. See llm_near_dedup_minhash.
     docs = load(spark, sf_dir, "documents")
     t = F.split("text", " ")
     # bigrams via zip_with over two aligned slices of ONE split (the
@@ -829,7 +846,9 @@ def llm_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     machinery from MinHash, so only the sketch is materialized here.
     """
     docs = load(spark, sf_dir, "documents")
-    tok = _tokens(docs)
+    # md5 per token is the CPU-heavy stage: spread a few-split corpus
+    # across the cores before the explode (partitioning.spread_to_cores)
+    tok = _tokens(spread_to_cores(docs))
     h = F.md5("token")
     per_bit = [
         F.sum(

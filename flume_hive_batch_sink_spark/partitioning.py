@@ -1,4 +1,4 @@
-"""Partitioning helpers for fan-out-heavy operators (round-15).
+"""Partitioning helpers for fan-out-heavy and CPU-heavy operators.
 
 AQE's partition coalescing sizes post-shuffle partitions by the shuffle's
 INPUT bytes. For the candidate-generation joins in the dedup/similarity
@@ -18,7 +18,6 @@ local[32] constant.
 
 from __future__ import annotations
 
-import os
 from contextlib import contextmanager
 from pathlib import Path
 
@@ -59,41 +58,22 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]):
                 spark.conf.set(k, old)
 
 
-def fanout_session(spark: SparkSession) -> SparkSession:
-    """A clone of ``spark`` (same SparkContext, same runtime confs —
-    including the driver's timezone/legacy settings) with AQE disabled:
-    plans BUILT from the clone execute AQE-free wherever they are later
-    executed, without touching the caller's session — the per-query
-    version of a set/restore conf scope, robust to the driver executing
-    the returned DataFrame long after the builder returned.
+def spread_to_cores(df: DataFrame) -> DataFrame:
+    """``df`` round-robined up to the scheduler's default parallelism
+    when it has fewer partitions than that, else ``df`` unchanged.
 
-    Round-16 status: NOT wired into any operator. VERDICT r15 item 1
-    proposed scoping AQE off around the fan-out dedup pipelines on the
-    strength of a round-15 "llm_jaccard_dedup 4.6 s with AQE vs 2.4 s
-    without" measurement; an interleaved A/B on the current code
-    (scripts/probe_fanout_aqe.py, medians of 5 at sf0.1) measured the
-    clone NEUTRAL-to-slightly-negative (llm_near_dedup_minhash 8.45 s
-    AQE-on vs 8.72 s off; llm_jaccard_dedup 2.95 s vs 3.06 s), and a
-    session-wide AQE toggle reproduced the null result — the round-15
-    AQE-off figure predated the explicit fan-out repartitions and was
-    capturing the same under-parallelization those now fix. Kept (with
-    the probe) as the validated mechanism + negative result so the next
-    round does not re-derive either.
-
-    ``SPARK_GRAFT_FANOUT_AQE=1`` makes it a no-op (returns ``spark``);
-    any failure to clone (e.g. a non-classic session) falls back to the
-    caller's session unchanged.
-    """
-    if os.environ.get("SPARK_GRAFT_FANOUT_AQE") == "1":
-        return spark
-    try:
-        clone = SparkSession(
-            spark.sparkContext, spark._jsparkSession.cloneSession()
-        )
-        clone.conf.set("spark.sql.adaptive.enabled", "false")
-        return clone
-    except Exception:
-        return spark
+    For CPU-heavy per-row stages (MinHash/SimHash signatures) over a
+    small input: a 1 MB corpus is one scan split — ``openCostInBytes``
+    sets the minimum split size, so its row groups do not help — and
+    the whole signature stage would run as one task on one core. The
+    shuffle moves the raw rows once; at corpus scale the input already
+    has more splits than cores and no Exchange is added. Meant for scans:
+    the count comes from the planned RDD, and planning an input that
+    already holds an exchange runs that exchange's stage under AQE."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= par:
+        return df
+    return df.repartition(par)
 
 
 def input_scaled_partitions(path_or_bytes: str | int) -> int:

@@ -39,13 +39,14 @@ def write_epoch(
     repartition bounds concurrent writers per Hive partition (the
     `maxOpenFiles` analogue) and maxRecordsPerFile is the roll policy.
     """
-    spark = epoch_df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    # writer-scoped dynamic mode (as operators/etl.py does): the
+    # caller's session conf is never mutated
     (
         with_partition_keys(epoch_df)
         .withColumn("epoch", F.lit(epoch_id))
         .repartition(F.col("dt"), F.col("hr"))
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .option("maxRecordsPerFile", max_records_per_file)
         .partitionBy("epoch", "dt", "hr")
         .parquet(out_dir)

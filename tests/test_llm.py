@@ -734,6 +734,30 @@ def test_minhash_guard_gray_zone_density(spark, monkeypatch, tmp_path):
     assert small_pairs <= full_pairs
 
 
+def test_minhash_signatures_computed_once(spark):
+    """One llm_near_dedup_minhash call computes its MinHash signatures
+    once: the guard's width profile fills the local-checkpointed band
+    relation and the candidate join reads it back. So the executed
+    result plan scans that checkpointed RDD and holds no signature
+    expression (array_min over the token array) — `documents` is
+    scanned again only for the verify tier's hashed token arrays."""
+    import contextlib
+    import io
+
+    from flume_hive_batch_sink_spark.llm import dedup as D
+
+    df = D.llm_near_dedup_minhash(spark, SF_DIR)
+    df.collect()
+    assert D.LAST_MINHASH_GUARD, "the guard profile is what fills the bands"
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain(mode="formatted")
+    p = buf.getvalue()
+    assert "== Final Plan ==" in p  # the executed plan, not a pre-run one
+    assert "Scan ExistingRDD" in p and "localCheckpoint" in p
+    assert "array_min" not in p
+
+
 def test_minhash_family_is_literal_seeded(spark):
     """Pin the signature hash families to their documented literal-seed
     definitions. Guards the PySpark transform() arity trap: a lambda

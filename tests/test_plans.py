@@ -193,6 +193,34 @@ def test_minhash_signature_stage_is_map_side(spark):
     assert "Generate" in p  # the posexplode is there — right plan, not a stub
 
 
+def test_spread_to_cores_fills_default_parallelism(spark):
+    """A one-split input (a small corpus is one scan split) is spread
+    to at least the scheduler's default parallelism, so a CPU-heavy
+    signature stage after it runs on every core."""
+    from flume_hive_batch_sink_spark.partitioning import spread_to_cores
+
+    par = spark.sparkContext.defaultParallelism
+    docs = load(spark, SF_DIR, "documents").coalesce(1)
+    spread = spread_to_cores(docs)
+    assert spread.rdd.getNumPartitions() >= par
+    assert "Exchange" in plan(spread)
+    assert sorted(r.doc_id for r in spread.select("doc_id").collect()) == sorted(
+        r.doc_id for r in docs.select("doc_id").collect()
+    )
+
+
+def test_spread_to_cores_leaves_wide_input_alone(spark):
+    """An input that already has default-parallelism partitions (the
+    corpus-scale case: many splits) gets no extra Exchange."""
+    from flume_hive_batch_sink_spark.partitioning import spread_to_cores
+
+    par = spark.sparkContext.defaultParallelism
+    wide = spark.range(0, 1000, numPartitions=par)
+    spread = spread_to_cores(wide)
+    assert spread is wide
+    assert "Exchange" not in plan(spread)
+
+
 def test_ntile_approx_has_no_window(spark):
     """The scale-safe quartile operator must compile WITHOUT any
     WindowExec (its reason to exist: win_ntile's exact global ntile
