@@ -34,12 +34,11 @@ from flume_hive_batch_sink_spark.partitioning import (
 )
 from flume_hive_batch_sink_spark.registry import query
 
-# MinHash/LSH geometry: 32 hash functions = 16 bands × 2 rows.
+# MinHash/LSH geometry: 32 signature positions = 16 bands × 2 rows.
 # For a pair at the J=0.8 decision boundary the miss probability is
 # (1 - 0.8²)¹⁶ ≈ 7e-8, so LSH candidate recall is exact-equivalent for
 # this fixture (dense similarity: ~30k true pairs at sf0.01) while still
 # demonstrating the banding structure that makes 100 TB feasible.
-_N_HASHES = 32
 _BANDS = 16
 _ROWS = 2
 _JACCARD_T = 0.8
@@ -374,40 +373,59 @@ def token_arrays(docs: DataFrame) -> DataFrame:
     )
 
 
-def minhash_bands(tok_arr: DataFrame) -> DataFrame:
-    """(doc_id, band_idx, band_key) rows for LSH bucketing.
-
-    Per-doc MinHash signature: h_i = min over tokens of xxhash64(i:token)
-    — an ``array_min(transform(...))`` codegen expression; band key =
-    xxhash64 of the band's signature slice (an 8-byte join key — md5
-    strings quadruple the shuffle width for no information gain). The
-    whole stage is PURE map-side: scan → project → posexplode, zero
-    Exchange — asserted by tests/test_plans.py (the property that makes
-    signatures free at 100 TB: they ride along the initial scan)."""
+def minhash_position(toks: F.Column, k: int, h) -> F.Column:
+    """MinHash signature position ``k``: min over the token array of
+    ``h('k:' || token)``, an ``array_min(transform(...))`` codegen
+    expression. ``h`` is xxhash64 in production and md5 in the
+    DuckDB-replayable certificate family (``_pr_sig_sql``)."""
     # NB: the seed must be bound via closure, NOT a defaulted second
     # lambda parameter — PySpark treats ANY two-parameter lambda in
     # transform() as (element, index) and passes the array-index Column
     # into the second slot, silently clobbering the default (the seed
     # then stringifies as the Column's repr). tests/test_llm.py pins
     # the literal-seeded family against hand-computed values.
-    def _minhash(i: int) -> F.Column:
-        prefix = F.lit(f"{i}:")
-        return F.array_min(
-            F.transform(F.col("toks"), lambda t: F.xxhash64(F.concat(prefix, t)))
-        )
+    prefix = F.lit(f"{k}:")
+    return F.array_min(F.transform(toks, lambda t: h(F.concat(prefix, t))))
 
+
+def _xxhash_band_key(b: int, cols: list[F.Column]) -> F.Column:
+    return F.xxhash64(F.lit(b), *cols)
+
+
+def _md5_band_key(b: int, cols: list[F.Column]) -> F.Column:
+    return F.md5(F.concat_ws("|", *cols))
+
+
+def minhash_bands(
+    tok_arr: DataFrame,
+    bands: int = _BANDS,
+    rows: int = _ROWS,
+    h=F.xxhash64,
+    band_key=_xxhash_band_key,
+) -> DataFrame:
+    """(doc_id, n, band_idx, band_key) rows for LSH bucketing.
+
+    Per-doc MinHash signature of ``bands × rows`` positions hashed by
+    ``h``; band ``b``'s key is ``band_key(b, slice)``. Defaults are the
+    production family: 16×2, xxhash64, an 8-byte band key (md5 strings
+    quadruple the shuffle width for no information gain). The
+    certificate keys pass (8, 2, md5, _md5_band_key), the bucket the
+    DuckDB oracles replay bit-exactly. The whole stage is PURE map-side:
+    scan → project → posexplode, zero Exchange — asserted by
+    tests/test_plans.py (the property that makes signatures free at
+    100 TB: they ride along the initial scan)."""
     sig = tok_arr.select(
         "doc_id",
         F.size("toks").alias("n"),
-        *[_minhash(i).alias(f"h{i}") for i in range(_N_HASHES)],
+        *[
+            minhash_position(F.col("toks"), i, h).alias(f"h{i}")
+            for i in range(bands * rows)
+        ],
     )
     key_arr = F.array(
         *[
-            F.xxhash64(
-                F.lit(b),
-                *[F.col(f"h{b * _ROWS + r}") for r in range(_ROWS)],
-            )
-            for b in range(_BANDS)
+            band_key(b, [F.col(f"h{b * rows + r}") for r in range(rows)])
+            for b in range(bands)
         ]
     )
     # `n` (distinct-token count, one int riding the map-side explode) is
@@ -1323,52 +1341,28 @@ _MINHASH_EST_ORACLE = f"""
 """
 
 
-def _minhash_estimate_frame(
-    docs: DataFrame, pair_sampled: bool = False
+def _exact_jaccard_pairs(
+    tok_arr: DataFrame, min_j: float, pair_sampled: bool = False
 ) -> DataFrame:
-    """The estimator-calibration dataflow shared by the full-corpus key
-    (sf0.01 certificate tier) and the content-addressed-sampled key
-    (the 100 TB path): per-doc md5 signatures (map-side codegen), exact
-    all-pairs Jaccard over whatever ``docs`` holds, per-pair estimate
-    vs truth. Pair count is quadratic in len(docs) BY PURPOSE — the
-    caller bounds it. ``pair_sampled`` additionally scopes the truth
-    join to the content-addressed 1/16 pair sample (the predicate sits
-    IN the join condition, so array_intersect only runs for kept
-    pairs)."""
-    tok_arr = token_arrays(docs)
-
-    # seed bound via closure — see _minhash in llm_near_dedup_minhash
-    # for why a defaulted second lambda parameter silently breaks
-    def _est_sig(k: int) -> F.Column:
-        prefix = F.lit(f"{k}:")
-        return F.array_min(
-            F.transform(F.col("toks"), lambda t: F.md5(F.concat(prefix, t)))
-        )
-
-    # Round-16 (guide §2.3, narrower types): the estimate only needs
-    # per-position EQUALITY of the md5-min winners, so each winner is
-    # collapsed to xxhash64 of its md5 hex digest — the argmin still
-    # runs on md5-string order (the oracle-pinned permutation), but the
-    # pair join ships 16 longs instead of 16 x 33-char strings and the
-    # zip_with compares 8-byte values. Same exactness class as the
-    # accepted token-intersect transform: equal iff the md5 winners are
-    # equal barring a ~1e-19/compare 64-bit collision.
-    sig = tok_arr.select(
-        "doc_id",
-        F.array(*[F.xxhash64(_est_sig(k)) for k in range(_EST_K)]).alias("sig"),
-    )
-
+    """(doc_a, doc_b, j): exact all-pairs Jaccard ≥ ``min_j`` over a
+    ``token_arrays`` relation, the calibration certificates' ground
+    truth. Quadratic in len(tok_arr) BY PURPOSE — the caller bounds it.
+    ``pair_sampled`` scopes the join to the content-addressed 1/16 pair
+    sample (in the join condition, so array_intersect only runs for
+    kept pairs)."""
+    # Intersect xxhash64 token values, not strings (round-15, guide
+    # §2.3 "narrower types"): the per-pair |∩| is unchanged barring a
+    # 64-bit collision (~1e-9 per vocabulary) — the identical, already
+    # accepted transform llm_near_dedup_minhash's verify tier uses.
+    # Measured at sf0.1 (12.5M pairs): 13.1 s → 3.2 s (4.1×), pair set
+    # bit-identical to the string intersect.
     hashed = tok_arr.select(
         "doc_id", F.transform("toks", lambda t: F.xxhash64(t)).alias("toks")
     )
-    # The sampled doc relation is tiny (a few thousand rows in 1-2 scan
-    # partitions), but the pair join fans it out quadratically — left
-    # in scan partitioning, millions of pair evaluations land on 2
-    # tasks while the rest of the cluster idles. Round-robin the
-    # streamed side across the full parallelism first: the shuffle
-    # moves only |docs| rows, the O(|docs|²) probe work spreads evenly.
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    pa = hashed.repartition(par).select(
+    # The doc relation is small (1-2 scan partitions) but the pair join
+    # fans it out quadratically: spreading the streamed side moves only
+    # |docs| rows and keeps the O(|docs|²) probe off 2 tasks.
+    pa = spread_to_cores(hashed).select(
         F.col("doc_id").alias("doc_a"), F.col("toks").alias("ta")
     )
     pb = hashed.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("tb"))
@@ -1380,9 +1374,8 @@ def _minhash_estimate_frame(
     # broadcast of pb (a fixed FRACTION of the corpus, not a fixed
     # size) would OOM. The planner sizes pb itself — broadcast-NL at
     # certificate scale, partition-paired cartesian past the
-    # threshold; the repartition keeps the probe work spread either
-    # way.
-    true_j = (
+    # threshold; the spread keeps the probe work even either way.
+    return (
         pa.join(pb, cond)
         .withColumn("ni", F.size(F.array_intersect("ta", "tb")))
         .withColumn(
@@ -1390,9 +1383,38 @@ def _minhash_estimate_frame(
             F.col("ni").cast("double")
             / (F.size("ta") + F.size("tb") - F.col("ni")),
         )
-        .filter(F.col("j") >= _EST_MIN_J)
+        .filter(F.col("j") >= min_j)
         .select("doc_a", "doc_b", "j")
     )
+
+
+def _minhash_estimate_frame(
+    docs: DataFrame, pair_sampled: bool = False
+) -> DataFrame:
+    """The estimator-calibration dataflow shared by the full-corpus key
+    (sf0.01 certificate tier) and the content-addressed-sampled key
+    (the 100 TB path): per-doc md5 signatures (map-side codegen), the
+    exact Jaccard truth over ``docs`` (_exact_jaccard_pairs), per-pair
+    estimate vs truth."""
+    tok_arr = token_arrays(docs)
+    # Round-16 (guide §2.3, narrower types): the estimate only needs
+    # per-position EQUALITY of the md5-min winners, so each winner is
+    # collapsed to xxhash64 of its md5 hex digest — the argmin still
+    # runs on md5-string order (the oracle-pinned permutation), but the
+    # pair join ships 16 longs instead of 16 x 33-char strings and the
+    # zip_with compares 8-byte values. Same exactness class as the
+    # accepted token-intersect transform: equal iff the md5 winners are
+    # equal barring a ~1e-19/compare 64-bit collision.
+    sig = tok_arr.select(
+        "doc_id",
+        F.array(
+            *[
+                F.xxhash64(minhash_position(F.col("toks"), k, F.md5))
+                for k in range(_EST_K)
+            ]
+        ).alias("sig"),
+    )
+    true_j = _exact_jaccard_pairs(tok_arr, _EST_MIN_J, pair_sampled)
 
     sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sa"))
     sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sb"))
@@ -1498,6 +1520,13 @@ def _pair_sample_pred(a: F.Column, b: F.Column) -> F.Column:
     )
 
 
+def _est_sample(docs: DataFrame) -> DataFrame:
+    """``docs`` scoped to the content-addressed 6.25% calibration
+    sample — the Spark twin of _sampled_oracle's predicate."""
+    h = F.md5(F.concat(F.lit(_EST_SAMPLE_SALT), F.col("doc_id").cast("string")))
+    return docs.filter(F.substring(h, 1, 2) < _EST_SAMPLE_LT)
+
+
 def _sampled_oracle(parent_oracle: str) -> str:
     """Derive a sampled sibling's oracle by scoping the parent's ONE
     documents scan to the content-addressed sample. Import-time
@@ -1562,18 +1591,7 @@ def llm_minhash_estimate_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     untouched and caps the quadratic array_intersect work — at sf1
     the unsampled pair set is ~5M and dominated the whole calibration
     sweep's wall time (round-9 verdict #4)."""
-    docs = load(spark, sf_dir, "documents").filter(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit(_EST_SAMPLE_SALT), F.col("doc_id").cast("string")
-                )
-            ),
-            1,
-            2,
-        )
-        < _EST_SAMPLE_LT
-    )
+    docs = _est_sample(load(spark, sf_dir, "documents"))
     return _minhash_estimate_frame(docs, pair_sampled=True)
 
 
@@ -1792,66 +1810,26 @@ def _lsh_pr_oracle(pair_sql: str = "TRUE") -> str:
 _LSH_PR_ORACLE = _lsh_pr_oracle()
 
 
-def _pr_tokens(docs: DataFrame) -> DataFrame:
-    """Distinct token ARRAY per doc — shared by the md5 certificate
-    family (P/R, bucket profile)."""
-    return docs.select(
-        "doc_id", F.array_distinct(F.split("text", " ")).alias("t")
-    )
-
-
-def _pr_band_rows(toks: DataFrame) -> DataFrame:
-    """(doc_id, band_idx, band_key) rows for the md5-string certificate
-    banding (_PR_BANDS × _PR_ROWS over _PR_K md5 minima) — the
-    DuckDB-replayable twin of minhash_bands (md5 hex digests order
-    identically everywhere, so every bucket is bit-exact across
-    engines). Pure map-side, same as the production family."""
-
-    def sig(k: int) -> F.Column:
-        pre = F.lit(f"{k}:")
-        return F.array_min(
-            F.transform(F.col("t"), lambda x: F.md5(F.concat(pre, x)))
-        )
-
-    sigs = toks.select(
-        "doc_id", *[sig(k).alias(f"s{k}") for k in range(_PR_K)]
-    )
-    band_arr = F.array(
-        *[
-            F.md5(
-                F.concat_ws("|", F.col(f"s{2 * b}"), F.col(f"s{2 * b + 1}"))
-            )
-            for b in range(_PR_BANDS)
-        ]
-    )
-    return sigs.select(
-        "doc_id", F.posexplode(band_arr).alias("band_idx", "band_key")
-    )
-
-
 def _lsh_band_pr_frame(docs: DataFrame, pair_sampled: bool = False) -> DataFrame:
     """The banding-P/R dataflow shared by the full-corpus certificate
     and its content-addressed-sampled scale sibling: md5 signatures →
     8×2 banding → candidate pairs by band key, exact all-pairs Jaccard
     truth over ``docs``, and the precision/recall summary. The truth
     side is quadratic in len(docs) BY PURPOSE — the caller bounds it."""
-    toks = _pr_tokens(docs)
-    bands = _pr_band_rows(toks)
+    toks = token_arrays(docs)
+    bands = minhash_bands(toks, _PR_BANDS, _PR_ROWS, F.md5, _md5_band_key)
     a, b = bands.alias("a"), bands.alias("b")
     cand_cond = (
         (F.col("a.band_idx") == F.col("b.band_idx"))
         & (F.col("a.band_key") == F.col("b.band_key"))
         & (F.col("a.doc_id") < F.col("b.doc_id"))
     )
-    truth_cond = F.col("doc_a") < F.col("doc_b")
     if pair_sampled:
-        # BOTH joins scope to the same content-addressed pair sample,
-        # keeping precision and recall well-defined over it.
+        # the candidate join and the truth join scope to the same
+        # content-addressed pair sample, keeping precision and recall
+        # well-defined over it.
         cand_cond = cand_cond & _pair_sample_pred(
             F.col("a.doc_id"), F.col("b.doc_id")
-        )
-        truth_cond = truth_cond & _pair_sample_pred(
-            F.col("doc_a"), F.col("doc_b")
         )
     cand = (
         a.join(b, cand_cond)
@@ -1860,37 +1838,9 @@ def _lsh_band_pr_frame(docs: DataFrame, pair_sampled: bool = False) -> DataFrame
         )
         .distinct()
     )
-    # spread the quadratic truth probe across the full parallelism —
-    # same rationale as _minhash_estimate_frame's repartition(par)
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    # Intersect xxhash64 token values, not strings (round-15, guide
-    # §2.3 "narrower types"): the per-pair |∩| is unchanged barring a
-    # 64-bit collision (~1e-9 per vocabulary) — the identical, already
-    # accepted transform llm_near_dedup_minhash's verify tier uses —
-    # and the truth tier is THE quadratic stage of this certificate.
-    # Measured at sf0.1 (12.5M pairs): 13.1 s → 3.2 s (4.1×), pair set
-    # bit-identical to the string intersect.
-    hashed = toks.select(
-        "doc_id", F.transform("t", lambda x: F.xxhash64(x)).alias("t")
+    truth = _exact_jaccard_pairs(toks, _PR_T, pair_sampled).select(
+        "doc_a", "doc_b"
     )
-    pa = hashed.repartition(par).select(
-        F.col("doc_id").alias("doc_a"), F.col("t").alias("ta")
-    )
-    pb = hashed.select(F.col("doc_id").alias("doc_b"), F.col("t").alias("tb"))
-    # No broadcast hint (same rationale as _minhash_estimate_frame):
-    # pb is a fixed fraction of the corpus, so a forced broadcast
-    # grows linearly with data; the planner picks broadcast-NL at
-    # certificate scale and degrades safely past the threshold.
-    pairs = (
-        pa.join(pb, truth_cond)
-        .withColumn("ni", F.size(F.array_intersect("ta", "tb")))
-        .withColumn("na", F.size("ta"))
-        .withColumn("nb", F.size("tb"))
-    )
-    jac = F.col("ni").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("ni")
-    )
-    truth = pairs.filter(jac >= _PR_T).select("doc_a", "doc_b")
     # Single-pass summary (round-15, guide §1.2 "don't compute things
     # twice"): the old hits-join + three separate count aggregates
     # recomputed the cand subtree twice and the quadratic truth subtree
@@ -1984,18 +1934,7 @@ def llm_lsh_band_pr_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     this key and its minhash sibling were ~85% of the sf1 sweep).
     The oracle replays the sample, signatures, banding, and truth
     bit-exactly — the certificate never softens at scale."""
-    docs = load(spark, sf_dir, "documents").filter(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit(_EST_SAMPLE_SALT), F.col("doc_id").cast("string")
-                )
-            ),
-            1,
-            2,
-        )
-        < _EST_SAMPLE_LT
-    )
+    docs = _est_sample(load(spark, sf_dir, "documents"))
     return _lsh_band_pr_frame(docs, pair_sampled=True)
 
 
@@ -2036,17 +1975,17 @@ def llm_lsh_bucket_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     per band, the number of colliding buckets (w > 1), the widest
     bucket, and the exact candidate volume Σ w(w−1)/2 that the band
     would contribute to the LSH pair join. Runs over the md5-string
-    certificate family (_pr_band_rows) so DuckDB replays every bucket
-    bit-exactly; the production guard runs the identical profile over
-    the xxhash64 family.
+    certificate family (minhash_bands with md5) so DuckDB replays
+    every bucket bit-exactly; the production guard runs the identical
+    profile over the xxhash64 family.
 
     100 TB shape: one map-side banding pass + a two-level hash-agg on
     8-byte-ish keys — the same cost class as a groupBy count; this is
     why the guard can afford to run unconditionally before every
     pair-generation stage."""
-    toks = _pr_tokens(load(spark, sf_dir, "documents"))
+    toks = token_arrays(load(spark, sf_dir, "documents"))
     prof = (
-        _pr_band_rows(toks)
+        minhash_bands(toks, _PR_BANDS, _PR_ROWS, F.md5, _md5_band_key)
         .groupBy("band_idx", "band_key")
         .agg(F.count("*").alias("w"))
         .filter(F.col("w") > 1)
@@ -2155,36 +2094,24 @@ def llm_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. Integer counts make precision/recall bit-portable; both
     are rounded from exact integers, NULL-guarded on empty candidate
     sets."""
-    docs = load(spark, sf_dir, "documents").filter(
-        F.substring(
-            F.md5(F.concat(F.lit(_EST_SAMPLE_SALT), F.col("doc_id").cast("string"))),
-            1,
-            2,
-        )
-        < _EST_SAMPLE_LT
-    )
-    toks = docs.select(
-        "doc_id", F.array_distinct(F.split("text", " ")).alias("t")
-    )
-
-    def sig(k: int) -> F.Column:
-        pre = F.lit(f"{k}:")
-        return F.array_min(
-            F.transform(F.col("t"), lambda x: F.md5(F.concat(pre, x)))
-        )
-
+    toks = token_arrays(_est_sample(load(spark, sf_dir, "documents")))
     sigs = toks.select(
-        "doc_id", "t", *[sig(k).alias(f"s{k}") for k in range(_PR_K)]
+        "doc_id",
+        "toks",
+        *[
+            minhash_position(F.col("toks"), k, F.md5).alias(f"h{k}")
+            for k in range(_PR_K)
+        ],
     )
     a = sigs.select(
         F.col("doc_id").alias("doc_a"),
-        F.col("t").alias("ta"),
-        *[F.col(f"s{k}").alias(f"a{k}") for k in range(_PR_K)],
+        F.col("toks").alias("ta"),
+        *[F.col(f"h{k}").alias(f"a{k}") for k in range(_PR_K)],
     )
     b = sigs.select(
         F.col("doc_id").alias("doc_b"),
-        F.col("t").alias("tb"),
-        *[F.col(f"s{k}").alias(f"b{k}") for k in range(_PR_K)],
+        F.col("toks").alias("tb"),
+        *[F.col(f"h{k}").alias(f"b{k}") for k in range(_PR_K)],
     )
 
     def coll(nb: int, r: int) -> F.Column:

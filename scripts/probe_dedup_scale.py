@@ -40,8 +40,11 @@ def main() -> None:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else str(
         REPO / "testdata" / "sf100rv"
     )
-    # Probe-scale scratch (see probe_minhash_sf100rv.py): spread Spark
-    # local dirs across tmpfs + disk — the local stand-in for a
+    # Probe-scale scratch: the exact verify of ~1e8 surviving candidate
+    # pairs needs ~60 GB of shuffle and sort-spill scratch on top of the
+    # job's retained shuffles, more than a single local disk holds (the
+    # ENOSPC runs in SCALE.md, "Round-13: the sf100rv probe"). Spread
+    # Spark local dirs across tmpfs + disk — the local stand-in for a
     # cluster's per-executor NVMe scratch.
     shm = "/dev/shm/spark_probe"
     os.makedirs(shm, exist_ok=True)

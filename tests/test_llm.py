@@ -779,15 +779,11 @@ def test_minhash_family_is_literal_seeded(spark):
         F.array_distinct(F.split("text", " ")).alias("t")
     ).collect()[0]["t"]
 
-    # the estimator's md5 family: h_k = min over tokens of md5("k:tok")
+    # the certificate md5 family, through the engine's own builder:
+    # h_k = min over tokens of md5("k:tok")
     tok_arr = D.token_arrays(docs)
     got = tok_arr.select(
-        F.array_min(
-            F.transform(
-                F.col("toks"),
-                lambda t: F.md5(F.concat(F.lit("3:"), t)),
-            )
-        ).alias("h3")
+        D.minhash_position(F.col("toks"), 3, F.md5).alias("h3")
     ).collect()[0]["h3"]
     want = min(hashlib.md5(f"3:{t}".encode()).hexdigest() for t in toks)
     assert got == want

@@ -179,16 +179,26 @@ def test_bucketed_join_pays_write_once_across_calls(spark):
     assert listing() == before
 
 
-def test_minhash_signature_stage_is_map_side(spark):
+@pytest.mark.parametrize("family", ["production", "certificate"])
+def test_minhash_signature_stage_is_map_side(spark, family):
     """The MinHash signature + banding stage must compile with ZERO
     Exchange: scan → project (array_min/transform codegen) → posexplode.
     This is the property that makes signatures free at 100 TB — they
     ride along the initial scan; the first shuffle in the dedup pipeline
-    is the band-bucket join, never signature computation."""
+    is the band-bucket join, never signature computation. Holds for the
+    production (xxhash64) and the certificate (md5) family alike."""
+    from pyspark.sql import functions as F
+
     from flume_hive_batch_sink_spark.llm import dedup
 
-    docs = load(spark, SF_DIR, "documents")
-    p = plan(dedup.minhash_bands(dedup.token_arrays(docs)))
+    tok = dedup.token_arrays(load(spark, SF_DIR, "documents"))
+    if family == "production":
+        bands = dedup.minhash_bands(tok)
+    else:
+        bands = dedup.minhash_bands(
+            tok, dedup._PR_BANDS, dedup._PR_ROWS, F.md5, dedup._md5_band_key
+        )
+    p = plan(bands)
     assert "Exchange" not in p
     assert "Generate" in p  # the posexplode is there — right plan, not a stub
 
