@@ -96,7 +96,7 @@ def _enable_input_cache() -> None:
     os.environ.setdefault("SPARK_GRAFT_CACHE_INPUTS", "1")
 
 
-from flume_hive_batch_sink_spark import io, registry  # noqa: E402
+from flume_hive_batch_sink_spark import io, partitioning, registry  # noqa: E402
 from flume_hive_batch_sink_spark.registry import load_all_operators  # noqa: E402
 from flume_hive_batch_sink_spark.session import get_spark  # noqa: E402
 
@@ -214,15 +214,13 @@ def run_spark_bench(sf_dir: str) -> dict:
     load_all_operators()
     spark = get_spark("bench")
 
-    # Size shuffle parallelism to the input volume (~32 MB per shuffle
-    # partition, floor 8): at bench scale 32 partitions are pure task-
-    # scheduling overhead; at cluster scale the same rule yields the
-    # large partition counts you'd expect. AQE still coalesces runtime
-    # skew on top.
-    input_mb = sum(
-        f.stat().st_size for f in Path(sf_dir).glob("*.parquet")
-    ) / (1 << 20)
-    parts = max(8, min(2048, int(input_mb / 32)))
+    # Size shuffle parallelism to the input volume with the engine's
+    # one sizing rule (~32 MB per shuffle partition, floor 8): at bench
+    # scale 32 partitions are pure task-scheduling overhead; at cluster
+    # scale the same rule yields the large partition counts you'd
+    # expect. AQE still coalesces runtime skew on top.
+    input_bytes = sum(size for _p, size in io.data_files(sf_dir))
+    parts = partitioning.input_scaled_partitions(input_bytes)
     # Never under-parallelize a big input: the 32 MB/partition rule gave
     # 21 partitions at sf1 — FEWER tasks than cores, so the window
     # stage's critical path was whichever skewed task a scheduler hiccup
@@ -230,7 +228,7 @@ def run_spark_bench(sf_dir: str) -> dict:
     # round-6 note). 2 tasks/core restores slack; small inputs (sf0.1
     # bench) keep their low counts.
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    if input_mb >= 256:
+    if input_bytes >= 256 << 20:
         parts = max(parts, 2 * cpus)
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
     # AQE is a runtime re-planner: it materializes every shuffle stage
@@ -239,7 +237,7 @@ def run_spark_bench(sf_dir: str) -> dict:
     # (session.py) keeps it ON — skew splitting and partition coalescing
     # are exactly what the 100 TB posture needs; it is a latency-vs-
     # robustness trade that flips with input size.
-    if input_mb < 1024:
+    if input_bytes < 1 << 30:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     # Cold-read companion metric (round-16, VERDICT r15 item 8 —

@@ -4,12 +4,13 @@ All ten tables are plain parquet; Spark's vectorized parquet reader gives
 columnar scans with predicate pushdown + column pruning for free, so the
 loader deliberately does nothing beyond ``spark.read.parquet`` — filters
 and projections belong in the operators so Catalyst can push them into
-the scan.
+the scan. ``data_files`` is the engine's one driver-side file lister.
 """
 
 from __future__ import annotations
 
 import os
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,6 +28,38 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+
+_DATA_SUFFIXES = (".parquet", ".csv", ".tsv")
+
+
+def data_files(root: str | os.PathLike) -> list[tuple[str, int]]:
+    """``(path, bytes)`` of every ``.parquet``/``.csv``/``.tsv`` file
+    under ``root``, recursively, sorted; a file lists itself, a missing
+    path nothing. ``_``/``.``-prefixed names (``_temporary``,
+    ``.spark-staging-*``) are skipped, as Spark's reader skips them.
+    ``file:`` URIs resolve to their local path; any other scheme raises
+    rather than silently listing nothing (Hadoop FS listing is ROADMAP
+    item 1)."""
+    root = os.fspath(root)
+    parts = urlsplit(root)
+    if parts.scheme == "file":
+        root = parts.path
+    elif len(parts.scheme) > 1:
+        raise ValueError(
+            f"data_files({root!r}): only local and file: paths are "
+            "listed; Hadoop FS listing is ROADMAP item 1"
+        )
+    if os.path.isfile(root):
+        return [(root, os.path.getsize(root))]
+    found = []
+    for d, dirs, files in os.walk(root):
+        dirs[:] = [n for n in dirs if not n.startswith(("_", "."))]
+        for f in files:
+            if f.endswith(_DATA_SUFFIXES) and not f.startswith(("_", ".")):
+                p = os.path.join(d, f)
+                found.append((p, os.path.getsize(p)))
+    return sorted(found)
 
 
 def _ensure_session_confs(spark: SparkSession) -> None:

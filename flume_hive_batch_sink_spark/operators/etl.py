@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from flume_hive_batch_sink_spark.io import load
+from flume_hive_batch_sink_spark.io import data_files, load
 from flume_hive_batch_sink_spark.registry import query
 
 
@@ -251,22 +251,14 @@ def etl_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         "maxRecordsPerFile", roll
     ).parquet(frag_dir)
 
-    def _parquet_files(d: str) -> list[str]:
-        return [
-            _os.path.join(r, f)
-            for r, _, fs in _os.walk(d)
-            for f in fs
-            if f.endswith(".parquet")
-        ]
-
-    frag_files = _parquet_files(frag_dir)
-    frag_bytes = sum(_os.path.getsize(f) for f in frag_files)
+    frag_files = data_files(frag_dir)
+    frag_bytes = sum(size for _p, size in frag_files)
     target_files = max(1, math.ceil(frag_bytes / (128 << 20)))
     back = spark.read.parquet(frag_dir)
     back.repartition(target_files).write.mode("overwrite").parquet(out_dir)
 
     compacted = spark.read.parquet(out_dir)
-    n_after = len(_parquet_files(out_dir))
+    n_after = len(data_files(out_dir))
     return compacted.agg(F.count("*").alias("n_rows")).select(
         F.col("n_rows").cast("long"),
         F.lit(n_after < len(frag_files)).alias("files_reduced"),

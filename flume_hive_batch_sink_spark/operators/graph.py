@@ -25,7 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flume_hive_batch_sink_spark.io import load
+from flume_hive_batch_sink_spark.io import data_files, load
 from flume_hive_batch_sink_spark.registry import query
 
 # Supplier node ids are offset into a disjoint range so the bipartite
@@ -379,11 +379,11 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every round checkpoints, exactly the round-15 behavior. The gate
     # reads the fact-input bytes (the checkpoint volume's upper bound
     # driver), not the core count.
-    fact_bytes = 0
-    for t in ("lineitem", "orders"):
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            fact_bytes += os.path.getsize(p)
+    fact_bytes = sum(
+        size
+        for t in ("lineitem", "orders")
+        for _p, size in data_files(os.path.join(sf_dir, f"{t}.parquet"))
+    )
     skip_alternate = fact_bytes >= (256 << 20)
 
     e = edges

@@ -26,7 +26,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flume_hive_batch_sink_spark.io import load
+from flume_hive_batch_sink_spark.io import data_files, load
 from flume_hive_batch_sink_spark.registry import query
 
 
@@ -256,20 +256,30 @@ def hive_partitioned_write_path(
     partition_cols: tuple[str, ...] = ("dt", "hr"),
     max_records_per_file: int = 1_000_000,
 ) -> None:
-    """The reference's core write path, Spark-native.
+    """The reference's core write path, Spark-native — the engine's one
+    Hive-partitioned writer (the streaming sink's epochs land through it).
 
     repartition on the partition keys bounds concurrent writers per
     partition (`maxOpenFiles` analogue); `maxRecordsPerFile` is the
     roll-count policy; the parquet committer's tmp+rename is the
-    reference's tmp-file + rename-on-close protocol.
+    reference's tmp-file + rename-on-close protocol. Overwrite is
+    dynamic and writer-scoped: only the partitions this write produces
+    are replaced, and the session conf is never touched.
     """
     (
         df.repartition(*[F.col(c) for c in partition_cols])
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .option("maxRecordsPerFile", max_records_per_file)
         .partitionBy(*partition_cols)
         .parquet(out_dir)
     )
+
+
+def leaf_partitions(out_dir: str) -> list[str]:
+    """The table's leaf partition directories: the parents of its data
+    files (io.data_files), sorted."""
+    return sorted({os.path.dirname(p) for p, _size in data_files(out_dir)})
 
 
 def write_done_markers(spark: SparkSession, out_dir: str) -> list[str]:
@@ -278,15 +288,14 @@ def write_done_markers(spark: SparkSession, out_dir: str) -> list[str]:
     The reference writes a per-partition done flag for downstream
     schedulers after metastore registration [R-pub: SURVEY.md §0.1]; we
     do the same after the file commit. Driver-side listing of partition
-    dirs is O(#partitions), not O(data).
+    dirs is O(#files), not O(data).
     """
     marked = []
-    for root, dirs, files in os.walk(out_dir):
-        if any(f.endswith(".parquet") for f in files):
-            marker = os.path.join(root, "_DONE")
-            with open(marker, "w") as fh:
-                fh.write("done\n")
-            marked.append(marker)
+    for leaf in leaf_partitions(out_dir):
+        marker = os.path.join(leaf, "_DONE")
+        with open(marker, "w") as fh:
+            fh.write("done\n")
+        marked.append(marker)
     return sorted(marked)
 
 
@@ -331,12 +340,8 @@ def file_roll_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = with_partition_keys(load(spark, sf_dir, "events"))
     out = os.path.join(tempfile.mkdtemp(prefix="file_roll_"), "events_tbl")
-    (
-        ev.repartition("hr")
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", 500)
-        .partitionBy("hr")
-        .parquet(out)
+    hive_partitioned_write_path(
+        ev, out, partition_cols=("hr",), max_records_per_file=500
     )
     return spark.read.parquet(out).groupBy("hr").agg(F.count("*").alias("n_rows"))
 
@@ -354,18 +359,14 @@ def done_marker(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = os.path.join(tempfile.mkdtemp(prefix="done_marker_"), "events_tbl")
     hive_partitioned_write_path(ev, out, partition_cols=("dt",))
     write_done_markers(spark, out)
-    rows = []
-    for name in sorted(os.listdir(out)):
-        if name.startswith("dt="):
-            has = os.path.exists(os.path.join(out, name, "_DONE"))
-            rows.append((name.split("=", 1)[1], has))
+    rows = [
+        (
+            os.path.basename(leaf).split("=", 1)[1],
+            os.path.exists(os.path.join(leaf, "_DONE")),
+        )
+        for leaf in leaf_partitions(out)
+    ]
     return spark.createDataFrame(rows, "dt STRING, has_done BOOLEAN")
-
-
-_EVENTS_DDL = (
-    "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
-    "event_type STRING, value DOUBLE, props STRING"
-)
 
 
 def register_catalog_partitions(
@@ -389,6 +390,7 @@ def register_catalog_partitions(
 
     from flume_hive_batch_sink_spark.sources import metastore as ms
     from flume_hive_batch_sink_spark.streaming.harness import _tmpdir
+    from flume_hive_batch_sink_spark.streaming.source import EVENTS_SCHEMA
 
     cfg = metastore_cfg or ms.MetastoreConfig()
     ev = with_partition_keys(load(spark, sf_dir, "events"))
@@ -397,18 +399,14 @@ def register_catalog_partitions(
 
     tbl = "evcat_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     name = ms.create_external_partitioned_table(
-        spark, cfg, tbl, _EVENTS_DDL, [("dt", "STRING"), ("hr", "BIGINT")], out
+        spark, cfg, tbl, EVENTS_SCHEMA, [("dt", "STRING"), ("hr", "BIGINT")], out
     )
 
     parts = []
-    for d in sorted(os.listdir(out)):
-        if not d.startswith("dt="):
-            continue
-        for h in sorted(os.listdir(os.path.join(out, d))):
-            if h.startswith("hr="):
-                parts.append(
-                    {"dt": d.split("=", 1)[1], "hr": int(h.split("=", 1)[1])}
-                )
+    for leaf in leaf_partitions(out):
+        rel = os.path.relpath(leaf, out).split(os.sep)
+        kv = dict(d.split("=", 1) for d in rel)
+        parts.append({"dt": kv["dt"], "hr": int(kv["hr"])})
     # incremental registration for the first half (one batched ALTER —
     # one catalog round-trip, the per-epoch path a streaming sink takes)
     ms.add_partitions(spark, cfg, tbl, parts[: len(parts) // 2])

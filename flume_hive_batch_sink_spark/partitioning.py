@@ -19,9 +19,10 @@ local[32] constant.
 from __future__ import annotations
 
 from contextlib import contextmanager
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+from flume_hive_batch_sink_spark.io import data_files
 
 
 def shuffle_parallelism(df: DataFrame) -> int:
@@ -77,22 +78,12 @@ def spread_to_cores(df: DataFrame) -> DataFrame:
 
 
 def input_scaled_partitions(path_or_bytes: str | int) -> int:
-    """Shuffle/state partition count derived from input volume — the
-    same ~32 MB/partition rule bench.py applies to the batch headline
-    session (floor 8, cap 2048), so partition counts scale with the
-    data instead of being a local-core-count constant. Accepts a
-    directory/file path (sums parquet/csv/tsv file sizes) or a byte
-    count."""
-    if isinstance(path_or_bytes, int):
-        n_bytes = path_or_bytes
-    else:
-        p = Path(path_or_bytes)
-        if p.is_dir():
-            n_bytes = sum(
-                f.stat().st_size
-                for pat in ("*.parquet", "*.csv", "*.tsv")
-                for f in p.glob(pat)
-            )
-        else:
-            n_bytes = p.stat().st_size if p.exists() else 0
+    """Shuffle/state partition count derived from input volume: ~32 MB
+    per partition, floor 8, cap 2048 — the one sizing rule (bench.py
+    sizes its headline session with it), so partition counts scale with
+    the data instead of being a local-core-count constant. Accepts a
+    byte count, or a path whose ``io.data_files`` are summed."""
+    n_bytes = path_or_bytes
+    if not isinstance(n_bytes, int):
+        n_bytes = sum(size for _p, size in data_files(n_bytes))
     return max(8, min(2048, int(n_bytes / (32 << 20))))

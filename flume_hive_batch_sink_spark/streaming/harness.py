@@ -34,11 +34,6 @@ def _tmpdir(prefix: str) -> str:
     atexit.register(shutil.rmtree, d, ignore_errors=True)
     return d
 
-EVENTS_SCHEMA = (
-    "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
-    "event_type STRING, value DOUBLE, props STRING"
-)
-
 
 def events_stream_partitions(sf_dir: str) -> int:
     """State/shuffle partition count for a replay of the events fixture,
@@ -143,29 +138,6 @@ def _state_conf_scope(spark: SparkSession, state_partitions: int | None):
     return scoped_conf(
         spark, {"spark.sql.shuffle.partitions": str(state_partitions)}
     )
-
-
-def run_to_memory(
-    stream_df: DataFrame,
-    name: str,
-    output_mode: str,
-    spark: SparkSession,
-    state_partitions: int | None = None,
-) -> DataFrame:
-    """Run a streaming DataFrame to completion (availableNow) into an
-    in-memory sink and return the result table."""
-    chk = _tmpdir(f"chk_{name}_")
-    with _state_conf_scope(spark, state_partitions):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
 
 
 def run_with_progress(

@@ -29,6 +29,21 @@ def _qname(prefix: str) -> str:
     return f"{prefix}_{uuid.uuid4().hex[:8]}"
 
 
+def _sink_table(
+    spark: SparkSession, stream_df: DataFrame, out_dir: str, sf_dir: str
+) -> DataFrame:
+    """Drain ``stream_df`` through the Hive sink into ``out_dir``, write
+    the done markers, and return the landed table. The epoch write's
+    keyed repartition sizes itself from spark.sql.shuffle.partitions,
+    scoped here to the stream's volume."""
+    with harness._state_conf_scope(
+        spark, harness.events_stream_partitions(sf_dir)
+    ):
+        sink.start_hive_sink(stream_df, out_dir).awaitTermination()
+    sink.finalize_partitions(spark, out_dir)
+    return sink.read_sink_table(spark, out_dir)
+
+
 @query(
     "stream_agg_update",
     oracle="""
@@ -43,10 +58,10 @@ def stream_agg_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = s.groupBy("event_type").agg(
         F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value")
     )
-    return harness.run_to_memory(
+    return harness.run_with_progress(
         agg, _qname("agg_update"), "complete", spark,
         state_partitions=harness.events_stream_partitions(sf_dir),
-    )
+    )[0]
 
 
 @query(
@@ -64,10 +79,10 @@ def stream_dedup_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = doubled.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    out = harness.run_to_memory(
+    out = harness.run_with_progress(
         deduped, _qname("dedup_wm"), "append", spark,
         state_partitions=harness.events_stream_partitions(sf_dir),
-    )
+    )[0]
     return out.groupBy("event_type").agg(F.count("*").alias("n"))
 
 
@@ -104,10 +119,10 @@ def stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("ws"), "n")
     )
-    return harness.run_to_memory(
+    return harness.run_with_progress(
         agg, _qname("watermark"), "append", spark,
         state_partitions=harness.events_stream_partitions(sf_dir),
-    )
+    )[0]
 
 
 @query(
@@ -147,10 +162,10 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p.event_id").alias("purchase_id"),
         F.col("s.event_id").alias("signup_id"),
     )
-    return harness.run_to_memory(
+    return harness.run_with_progress(
         joined, _qname("ss_join"), "append", spark,
         state_partitions=harness.events_stream_partitions(sf_dir),
-    )
+    )[0]
 
 
 @query(
@@ -167,15 +182,7 @@ def stream_foreachbatch_hive(spark: SparkSession, sf_dir: str) -> DataFrame:
     The re-read table's per-partition counts must equal the source."""
     out_dir = os.path.join(harness._tmpdir("stream_hive_"), "events_tbl")
     s = harness.events_stream(spark, sf_dir)
-    # volume-scaled epoch-write parallelism: write_epoch's keyed
-    # repartition(dt, hr) sizes itself from spark.sql.shuffle.partitions
-    with harness._state_conf_scope(
-        spark, harness.events_stream_partitions(sf_dir)
-    ):
-        q = sink.start_hive_sink(s, out_dir)
-        q.awaitTermination()
-    sink.finalize_partitions(spark, out_dir)
-    table = sink.read_sink_table(spark, out_dir)
+    table = _sink_table(spark, s, out_dir, sf_dir)
     return table.groupBy(
         F.col("dt").cast("string").alias("dt"), "hr"
     ).agg(F.count("*").alias("n_rows"))
@@ -191,11 +198,10 @@ def stream_rate_source_smoke(spark: SparkSession, sf_dir: str) -> DataFrame:
     row through exactly once — the output is the events projection
     itself, batch-expressible regardless of micro-batch boundaries."""
     s = harness.replay_chunks(spark, sf_dir, n_chunks=3, late_chunk=False)
-    out = harness.run_to_memory(
+    return harness.run_with_progress(
         s.select("event_id", "event_type"), _qname("replay_smoke"), "append", spark,
         state_partitions=harness.events_stream_partitions(sf_dir),
-    )
-    return out
+    )[0]
 
 
 @query(
@@ -233,10 +239,10 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         "update",
         GroupStateTimeout.NoTimeout,
     )
-    emitted = harness.run_to_memory(
+    emitted = harness.run_with_progress(
         out, _qname("custom_state"), "update", spark,
         state_partitions=harness.events_stream_partitions(sf_dir),
-    )
+    )[0]
     return emitted.groupBy("user_id").agg(F.max("n_events").alias("n_events"))
 
 
@@ -348,14 +354,7 @@ def stream_text_ingest_hive(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", max(1, (n_files + 1) // 2))
         .csv(src)
     )
-    # volume-scaled epoch-write parallelism (see stream_foreachbatch_hive)
-    with harness._state_conf_scope(
-        spark, harness.events_stream_partitions(sf_dir)
-    ):
-        q = sink.start_hive_sink(s, out_dir)
-        q.awaitTermination()
-    sink.finalize_partitions(spark, out_dir)
-    table = sink.read_sink_table(spark, out_dir)
+    table = _sink_table(spark, s, out_dir, sf_dir)
     return table.groupBy(
         F.col("dt").cast("string").alias("dt"), F.col("hr").cast("long").alias("hr")
     ).agg(
@@ -398,7 +397,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("sum_value"),
     )
-    return harness.run_to_memory(
+    return harness.run_with_progress(
         agg, _qname("static_join"), "complete", spark,
         state_partitions=harness.events_stream_partitions(sf_dir),
-    )
+    )[0]

@@ -99,7 +99,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = f"session_win_{uuid.uuid4().hex[:8]}"
-    return harness.run_to_memory(
+    return harness.run_with_progress(
         agg, name, "append", spark,
         state_partitions=harness.events_stream_partitions(sf_dir),
-    )
+    )[0]

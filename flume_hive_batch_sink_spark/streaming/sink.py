@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from flume_hive_batch_sink_spark.operators.ingest import (
+    hive_partitioned_write_path,
     with_partition_keys,
     write_done_markers,
 )
@@ -32,24 +33,17 @@ def write_epoch(
     out_dir: str,
     max_records_per_file: int = 1_000_000,
 ) -> None:
-    """Idempotent epoch write: partition layout epoch=/dt=/hr=.
-
-    Dynamic overwrite scoped to this epoch's partitions — a retried
-    epoch replaces exactly the partitions it wrote before. At scale the
-    repartition bounds concurrent writers per Hive partition (the
-    `maxOpenFiles` analogue) and maxRecordsPerFile is the roll policy.
-    """
-    # writer-scoped dynamic mode (as operators/etl.py does): the
-    # caller's session conf is never mutated
-    (
-        with_partition_keys(epoch_df)
-        .withColumn("epoch", F.lit(epoch_id))
-        .repartition(F.col("dt"), F.col("hr"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("maxRecordsPerFile", max_records_per_file)
-        .partitionBy("epoch", "dt", "hr")
-        .parquet(out_dir)
+    """Idempotent epoch write: partition layout epoch=/dt=/hr=, through
+    the engine's one Hive-partitioned writer. Its dynamic overwrite
+    means a retried epoch replaces exactly the partitions it wrote
+    before; its repartition bounds concurrent writers per Hive partition
+    (the `maxOpenFiles` analogue) and maxRecordsPerFile is the roll
+    policy."""
+    hive_partitioned_write_path(
+        with_partition_keys(epoch_df).withColumn("epoch", F.lit(epoch_id)),
+        out_dir,
+        partition_cols=("epoch", "dt", "hr"),
+        max_records_per_file=max_records_per_file,
     )
 
 

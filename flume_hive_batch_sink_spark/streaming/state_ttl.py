@@ -141,10 +141,10 @@ def stream_custom_state_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, n_chunks=4, sentinel_offsets_min=_SENTINELS
     )
     out = ttl_counters_stream(spark, src)
-    emitted = harness.run_to_memory(
+    emitted = harness.run_with_progress(
         out, f"custom_state_ttl_{uuid.uuid4().hex[:8]}", "update", spark,
         state_partitions=harness.events_stream_partitions(sf_dir),
-    )
+    )[0]
     return (
         emitted.filter(F.col("user_id") >= 0)
         .groupBy("user_id")

@@ -1,12 +1,15 @@
 """The Hive sink must not leak session conf: dynamic partition
 overwrite is a per-write option, so a drain leaves the caller's
 ``spark.sql.sources.partitionOverwriteMode`` as it found it — and the
-epoch writes still overwrite only their own partitions."""
+epoch writes still overwrite only their own partitions. Also pins the
+landed layout (one file per epoch=/dt=/hr= leaf, one marker per leaf)
+and finalize's behaviour on URI-addressed tables."""
 
 from __future__ import annotations
 
 import os
 
+import pytest
 from oracle import DEFAULT_SF_DIR
 
 from flume_hive_batch_sink_spark.io import load
@@ -56,3 +59,64 @@ def test_epoch_write_overwrites_dynamically_under_static_session(
         assert spark.conf.get(CONF) == "STATIC"
     finally:
         spark.conf.set(CONF, prior)
+
+
+def _parquet_leaves(out: str) -> dict[str, int]:
+    """Leaf directory → parquet file count, by an independent walk that
+    skips the ``_``/``.``-prefixed directories Spark's reader skips."""
+    leaves: dict[str, int] = {}
+    for root, dirs, files in os.walk(out):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        n = sum(f.endswith(".parquet") for f in files)
+        if n:
+            leaves[root] = n
+    return leaves
+
+
+def test_epoch_layout_one_file_per_leaf_and_marker(spark, tmp_path):
+    """Two epochs land as epoch=/dt=/hr= leaves holding exactly one
+    parquet file each (the writer's keyed repartition), and finalize
+    writes one _DONE marker per leaf — the layout perfbench's
+    landed.files and landed.leaf_partitions read. Staging leftovers of a
+    killed write are not partitions of the table and get no marker."""
+    from flume_hive_batch_sink_spark.operators.ingest import (
+        with_partition_keys,
+    )
+
+    ev = load(spark, DEFAULT_SF_DIR, "events").limit(400)
+    epochs = [ev.filter(ev.event_id % 2 == i) for i in (0, 1)]
+    out = str(tmp_path / "tbl")
+    for i, df in enumerate(epochs):
+        sink.write_epoch(df, i, out)
+    for staging in (".spark-staging-0", "_temporary"):
+        d = os.path.join(out, staging, "epoch=9", "dt=20000101", "hr=0")
+        os.makedirs(d)
+        open(os.path.join(d, "part-00000.parquet"), "w").close()
+    markers = sink.finalize_partitions(spark, out)
+
+    leaves = _parquet_leaves(out)
+    expected = {
+        os.path.join(out, f"epoch={i}", f"dt={r.dt}", f"hr={r.hr}")
+        for i, df in enumerate(epochs)
+        for r in with_partition_keys(df).select("dt", "hr").distinct().collect()
+    }
+    assert set(leaves) == expected
+    assert set(leaves.values()) == {1}
+    assert markers == sorted(os.path.join(d, "_DONE") for d in leaves)
+    assert all(os.path.isfile(m) for m in markers)
+
+
+def test_epoch_finalize_on_file_uri_matches_plain_path(spark, tmp_path):
+    """A table addressed as a file: URI finalizes exactly like its plain
+    path; a scheme the driver cannot list locally raises instead of
+    silently returning no markers."""
+    ev = load(spark, DEFAULT_SF_DIR, "events").limit(200)
+    out = tmp_path / "tbl"
+    sink.write_epoch(ev, 0, out.as_uri())
+    via_uri = sink.finalize_partitions(spark, out.as_uri())
+    assert via_uri, "file: URI table finalized with no markers"
+    assert via_uri == sink.finalize_partitions(spark, str(out))
+    assert len(via_uri) == len(_parquet_leaves(str(out)))
+    for uri in ("viewfs://lake/tbl", "hdfs://nn:8020/tbl"):
+        with pytest.raises(ValueError, match="ROADMAP item 1"):
+            sink.finalize_partitions(spark, uri)

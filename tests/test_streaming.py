@@ -10,7 +10,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from flume_hive_batch_sink_spark.io import load
-from flume_hive_batch_sink_spark.streaming import harness, sink
+from flume_hive_batch_sink_spark.streaming import harness, sink, source
 
 import pytest
 
@@ -96,7 +96,7 @@ def test_hive_sink_recovers_from_partial_epoch(spark):
 
     def run_sink() -> None:
         s = (
-            spark.readStream.schema(harness.EVENTS_SCHEMA)
+            spark.readStream.schema(source.EVENTS_SCHEMA)
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
