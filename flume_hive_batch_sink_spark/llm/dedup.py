@@ -375,9 +375,11 @@ def token_arrays(docs: DataFrame) -> DataFrame:
 
 def minhash_position(toks: F.Column, k: int, h) -> F.Column:
     """MinHash signature position ``k``: min over the token array of
-    ``h('k:' || token)``, an ``array_min(transform(...))`` codegen
-    expression. ``h`` is xxhash64 in production and md5 in the
-    DuckDB-replayable certificate family (``_pr_sig_sql``)."""
+    ``h('k:' || token)``, an ``array_min(transform(...))`` expression.
+    ``transform`` (ArrayTransform) is CodegenFallback in Spark 4.1, so
+    the position is evaluated interpreted, once per token, inside an
+    otherwise code-generated stage. ``h`` is xxhash64 in production and
+    md5 in the DuckDB-replayable certificate family (``_pr_sig_sql``)."""
     # NB: the seed must be bound via closure, NOT a defaulted second
     # lambda parameter — PySpark treats ANY two-parameter lambda in
     # transform() as (element, index) and passes the array-index Column
@@ -1393,7 +1395,7 @@ def _minhash_estimate_frame(
 ) -> DataFrame:
     """The estimator-calibration dataflow shared by the full-corpus key
     (sf0.01 certificate tier) and the content-addressed-sampled key
-    (the 100 TB path): per-doc md5 signatures (map-side codegen), the
+    (the 100 TB path): per-doc md5 signatures (map-side), the
     exact Jaccard truth over ``docs`` (_exact_jaccard_pairs), per-pair
     estimate vs truth."""
     tok_arr = token_arrays(docs)
@@ -1455,10 +1457,11 @@ def llm_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash values, and lexicographic order over identical md5 hex digests
     is engine-identical, so the oracle replays every signature position
     exactly (the sketch_bloom_prejoin convention, extended to string
-    keys). Spark shape: signatures are array_min/transform codegen over
-    the per-doc token array (map-side, zero shuffle); the estimate is a
-    zip_with equality fold over the two 16-element signature arrays —
-    candidate pairs never explode into (pair x K) rows. At 100 TB the
+    keys). Spark shape: signatures are array_min/transform (interpreted,
+    see minhash_position) over the per-doc token array (map-side, zero
+    shuffle); the estimate is a zip_with equality fold over the two
+    16-element signature arrays — candidate pairs never explode into
+    (pair x K) rows. At 100 TB the
     pair set comes from the LSH candidate generator, making this a
     sampling-free audit that rides the existing dedup dataflow.
     llm_minhash_estimate_sampled is the corpus-scale sibling (same

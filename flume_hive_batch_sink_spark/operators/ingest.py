@@ -12,10 +12,13 @@ projection/pushdown for parse+project, `date_format`/`hour` for the
 roll policy, and `_DONE` markers for the done-flag protocol.
 
 Scale notes (100 TB posture): every op here is a narrow map or a single
-hash aggregation on the partition keys; the write path repartitions by
-(dt, hr) before `partitionBy` so each Hive partition is produced by a
-bounded number of tasks (the writer-cache/`maxOpenFiles` analogue), and
-file size is bounded by `maxRecordsPerFile` (the roll-policy analogue).
+hash aggregation on the partition keys; the write path repartitions
+its input by the partition keys before `partitionBy`, so each Hive
+partition is produced by one task (the writer-cache/`maxOpenFiles`
+analogue). An input of one split under AQE's minimum partition size (a
+streaming epoch of one staged file) would be coalesced to one task
+anyway, so it goes to the writer unshuffled. File size is bounded by
+`maxRecordsPerFile` (the roll-policy analogue).
 """
 
 from __future__ import annotations
@@ -27,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flume_hive_batch_sink_spark.io import data_files, load
+from flume_hive_batch_sink_spark.partitioning import fits_one_task
 from flume_hive_batch_sink_spark.registry import query
 
 
@@ -259,16 +263,23 @@ def hive_partitioned_write_path(
     """The reference's core write path, Spark-native — the engine's one
     Hive-partitioned writer (the streaming sink's epochs land through it).
 
-    repartition on the partition keys bounds concurrent writers per
-    partition (`maxOpenFiles` analogue); `maxRecordsPerFile` is the
-    roll-count policy; the parquet committer's tmp+rename is the
-    reference's tmp-file + rename-on-close protocol. Overwrite is
-    dynamic and writer-scoped: only the partitions this write produces
-    are replaced, and the session conf is never touched.
+    The input is repartitioned on the partition keys, so one task
+    writes each partition (`maxOpenFiles` analogue) — unless it is one
+    split under AQE's minimum partition size (``fits_one_task``), which
+    AQE would coalesce to one reducer task anyway: then it goes to the
+    writer as is, and the writer's own sort on the partition columns
+    still gives one file per partition. Larger one-split inputs (a
+    whole events table) keep the shuffle, so their many leaves are
+    written by parallel tasks. `maxRecordsPerFile` is the roll-count
+    policy; the parquet committer's tmp+rename is the reference's
+    tmp-file + rename-on-close protocol. Overwrite is dynamic and
+    writer-scoped: only the partitions this write produces are replaced,
+    and the session conf is never touched.
     """
+    if not fits_one_task(df):
+        df = df.repartition(*[F.col(c) for c in partition_cols])
     (
-        df.repartition(*[F.col(c) for c in partition_cols])
-        .write.mode("overwrite")
+        df.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .option("maxRecordsPerFile", max_records_per_file)
         .partitionBy(*partition_cols)

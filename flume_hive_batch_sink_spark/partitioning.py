@@ -59,6 +59,24 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]):
                 spark.conf.set(k, old)
 
 
+def fits_one_task(df: DataFrame) -> bool:
+    """Whether ``df`` is one split smaller than AQE's minimum coalesced
+    partition size (``spark.sql.adaptive.coalescePartitions.minPartitionSize``,
+    1 MB by default). A keyed shuffle of such an input lands in one
+    reducer task anyway, so it adds a stage and buys no parallelism.
+    The size is the optimizer's estimate (file bytes for a scan); the
+    split count comes from the planned RDD. Planning only, no job; but
+    planning an input that already holds an exchange runs that
+    exchange's stage under AQE, so meant for scans and narrow maps over
+    them."""
+    spark = df.sparkSession
+    min_part = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+    )
+    est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return est < min_part and df.rdd.getNumPartitions() == 1
+
+
 def spread_to_cores(df: DataFrame) -> DataFrame:
     """``df`` round-robined up to the scheduler's default parallelism
     when it has fewer partitions than that, else ``df`` unchanged.

@@ -64,5 +64,22 @@ def get_spark(app_name: str = "flume-hive-batch-sink-spark") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Streaming checkpoint logs (source log, offsets, commits, state
+        # store commits) through FileSystem, not FileContext: on local
+        # disk a FileContext rename costs ~17 ms against ~0.3 ms for
+        # FileSystem.rename, so each small log write (createAtomic)
+        # drops from ~25 to ~6 ms (p50 over Py4J, 4-vCPU VM, no native
+        # libhadoop). Set at session build: the offsets and commits
+        # logs are created lazily on the stream thread from the session
+        # conf, so a conf scoped around start() would race. Chosen for
+        # local disk: this manager renames after an exists() check, so
+        # two writers of one batch file race where FileContext's
+        # no-overwrite rename fails atomically — revisit it (or keep the
+        # FileContext default) for hdfs:// checkpoints (ROADMAP item 1).
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     return builder.getOrCreate()

@@ -34,8 +34,9 @@ def _sink_table(
 ) -> DataFrame:
     """Drain ``stream_df`` through the Hive sink into ``out_dir``, write
     the done markers, and return the landed table. The epoch write's
-    keyed repartition sizes itself from spark.sql.shuffle.partitions,
-    scoped here to the stream's volume."""
+    keyed repartition (skipped for a small one-split epoch) sizes itself
+    from spark.sql.shuffle.partitions, scoped here to the stream's
+    volume."""
     with harness._state_conf_scope(
         spark, harness.events_stream_partitions(sf_dir)
     ):

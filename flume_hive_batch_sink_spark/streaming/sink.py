@@ -36,9 +36,12 @@ def write_epoch(
     """Idempotent epoch write: partition layout epoch=/dt=/hr=, through
     the engine's one Hive-partitioned writer. Its dynamic overwrite
     means a retried epoch replaces exactly the partitions it wrote
-    before; its repartition bounds concurrent writers per Hive partition
-    (the `maxOpenFiles` analogue) and maxRecordsPerFile is the roll
-    policy."""
+    before, and maxRecordsPerFile is the roll policy. An epoch is
+    repartitioned by (epoch, dt, hr), so one task writes each Hive
+    partition (the `maxOpenFiles` analogue) — unless it is one split
+    under AQE's minimum partition size (one staged file of a typical
+    epoch), which a single task writes as one file per leaf without
+    that shuffle."""
     hive_partitioned_write_path(
         with_partition_keys(epoch_df).withColumn("epoch", F.lit(epoch_id)),
         out_dir,

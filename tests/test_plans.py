@@ -182,7 +182,8 @@ def test_bucketed_join_pays_write_once_across_calls(spark):
 @pytest.mark.parametrize("family", ["production", "certificate"])
 def test_minhash_signature_stage_is_map_side(spark, family):
     """The MinHash signature + banding stage must compile with ZERO
-    Exchange: scan → project (array_min/transform codegen) → posexplode.
+    Exchange: scan → project (array_min/transform, an interpreted
+    CodegenFallback HOF in Spark 4.1) → posexplode.
     This is the property that makes signatures free at 100 TB — they
     ride along the initial scan; the first shuffle in the dedup pipeline
     is the band-bucket join, never signature computation. Holds for the

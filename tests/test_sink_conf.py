@@ -3,11 +3,14 @@ overwrite is a per-write option, so a drain leaves the caller's
 ``spark.sql.sources.partitionOverwriteMode`` as it found it — and the
 epoch writes still overwrite only their own partitions. Also pins the
 landed layout (one file per epoch=/dt=/hr= leaf, one marker per leaf)
-and finalize's behaviour on URI-addressed tables."""
+on both write paths (small one-split epochs unshuffled, the rest
+keyed), finalize's behaviour on URI-addressed tables, and the checkpoint
+file manager the session's streams commit through."""
 
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from oracle import DEFAULT_SF_DIR
@@ -75,10 +78,11 @@ def _parquet_leaves(out: str) -> dict[str, int]:
 
 def test_epoch_layout_one_file_per_leaf_and_marker(spark, tmp_path):
     """Two epochs land as epoch=/dt=/hr= leaves holding exactly one
-    parquet file each (the writer's keyed repartition), and finalize
-    writes one _DONE marker per leaf — the layout perfbench's
-    landed.files and landed.leaf_partitions read. Staging leftovers of a
-    killed write are not partitions of the table and get no marker."""
+    parquet file each (one task writes each leaf, whether or not the
+    writer repartitioned the epoch), and finalize writes one _DONE
+    marker per leaf — the layout perfbench's landed.files and
+    landed.leaf_partitions read. Staging leftovers of a killed write are
+    not partitions of the table and get no marker."""
     from flume_hive_batch_sink_spark.operators.ingest import (
         with_partition_keys,
     )
@@ -120,3 +124,111 @@ def test_epoch_finalize_on_file_uri_matches_plain_path(spark, tmp_path):
     for uri in ("viewfs://lake/tbl", "hdfs://nn:8020/tbl"):
         with pytest.raises(ValueError, match="ROADMAP item 1"):
             sink.finalize_partitions(spark, uri)
+
+
+def _write_plan(spark, write) -> str:
+    """The executed plan of the one parquet insert ``write()`` runs,
+    from the SQL status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    n0 = store.executionsCount()
+    write()
+    execs = store.executionsList()
+    plans = [
+        execs.apply(i).physicalPlanDescription()
+        for i in range(n0, execs.size())
+    ]
+    inserts = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
+    assert len(inserts) == 1, plans
+    return inserts[0]
+
+
+@pytest.mark.parametrize(
+    ("n_splits", "min_partition_size", "shuffled"),
+    [(1, None, False), (2, None, True), (1, "1k", True)],
+    ids=["one_small_split", "two_splits", "one_split_over_min_partition"],
+)
+def test_epoch_write_shuffles_unless_one_small_split(
+    spark, tmp_path, n_splits, min_partition_size, shuffled
+):
+    """A one-split epoch (one staged file) under AQE's minimum partition
+    size goes to the writer with no Exchange. An epoch of two files, or
+    one split above that size, keeps the keyed repartition on
+    (epoch, dt, hr). All land exactly one parquet file per leaf."""
+    from flume_hive_batch_sink_spark.operators.ingest import (
+        with_partition_keys,
+    )
+    from flume_hive_batch_sink_spark.partitioning import scoped_conf
+
+    staged = str(tmp_path / "src")
+    ev = load(spark, DEFAULT_SF_DIR, "events").limit(400)
+    ev.repartition(n_splits).write.parquet(staged)
+    epoch = spark.read.schema(source.EVENTS_SCHEMA).parquet(staged)
+    assert epoch.rdd.getNumPartitions() == n_splits
+
+    out = str(tmp_path / "tbl")
+    confs = {}
+    if min_partition_size:
+        confs["spark.sql.adaptive.coalescePartitions.minPartitionSize"] = (
+            min_partition_size
+        )
+    with scoped_conf(spark, confs):
+        p = _write_plan(spark, lambda: sink.write_epoch(epoch, 7, out))
+    if shuffled:
+        assert re.search(r"hashpartitioning\(7, dt#\d+, hr#\d+L?,", p), p
+    else:
+        assert "Exchange" not in p
+
+    leaves = _parquet_leaves(out)
+    expected = {
+        os.path.join(out, "epoch=7", f"dt={r.dt}", f"hr={r.hr}")
+        for r in with_partition_keys(epoch).select("dt", "hr").distinct().collect()
+    }
+    assert set(leaves) == expected
+    assert set(leaves.values()) == {1}
+    assert sink.read_sink_table(spark, out).count() == 400
+
+
+def test_session_checkpoints_through_filesystem_manager(spark, tmp_path):
+    """get_spark's streams commit their logs through the FileSystem
+    checkpoint manager, not the slower FileContext default."""
+    jvm = spark._jvm
+    mgr = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    created = mgr.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path / "chk")),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert created.getClass().getSimpleName() == (
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+
+def test_hive_sink_restart_on_finished_checkpoint_lands_nothing(
+    spark, tmp_path
+):
+    """A second start_hive_sink on a drained checkpoint finds every
+    offset committed: it lands no new epoch and the table keeps its row
+    count — the checkpoint logs written through the session's manager
+    are read back on restart."""
+    staged = str(tmp_path / "src")
+    ev = load(spark, DEFAULT_SF_DIR, "events").limit(300)
+    for i in range(3):
+        ev.filter(ev.event_id % 3 == i).coalesce(1).write.mode(
+            "append"
+        ).parquet(staged)
+    out, chk = str(tmp_path / "tbl"), str(tmp_path / "chk")
+
+    def drain() -> None:
+        stream = (
+            spark.readStream.schema(source.EVENTS_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(staged)
+        )
+        sink.start_hive_sink(stream, out, checkpoint_dir=chk).awaitTermination()
+
+    drain()
+    epochs = sorted(os.listdir(out))
+    assert epochs == ["epoch=0", "epoch=1", "epoch=2"]
+    assert sink.read_sink_table(spark, out).count() == 300
+    drain()
+    assert sorted(os.listdir(out)) == epochs
+    assert sink.read_sink_table(spark, out).count() == 300
