@@ -17,6 +17,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from flume_hive_batch_sink_spark.io import load
+from flume_hive_batch_sink_spark.partitioning import (
+    shuffle_parallelism,
+    spread_to_cores,
+)
 from flume_hive_batch_sink_spark.registry import query
 
 
@@ -182,8 +186,8 @@ def block_pairs(
     emb: DataFrame, mode: str, cache_key: str | None = None
 ) -> DataFrame:
     """Block-pair search structure: (va, vb) vector-payload rows, one row
-    per block combination, pre-shuffled so every pair lands on its own
-    task.
+    per block combination, hash-partitioned on (blk_a, blk_b) into
+    ``min(#pairs, spark.sql.shuffle.partitions)`` partitions.
 
     ``mode='tri'`` keeps the upper triangle blk_a ≤ blk_b (symmetric
     pair kernels); ``mode='cross'`` keeps all ordered combos (per-query
@@ -195,6 +199,13 @@ def block_pairs(
     partitions. k and thresholds live in the kernel, not the structure,
     so all query shapes share one cache entry per mode.
 
+    AQE does not coalesce a cached plan's output, so the count chosen
+    here is the Python task count of every query over the relation, and
+    each task pays the worker's per-task setup (~210 ms on a 4-vCPU
+    host) before its 1–5 ms GEMM; sizing it to the pair count keeps
+    empty partitions from running as tasks. Hash placement can still
+    put two pairs on one task.
+
     The cache is CAPPED at ``_PAIRS_CACHE_MAX_BLOCKS`` blocks: the
     pair-expanded payload is O(#blocks²) memory, so past the cap it
     streams per query instead (derived from the still-cached O(n)
@@ -205,17 +216,66 @@ def block_pairs(
         if hit is not None:
             return hit
     blocks = block_index(emb, cache_key)
+    # blocks is already cached+counted on the cache_key path, so this
+    # count is a metadata-cheap read, and the sizing and cap are exact.
+    n_blocks = blocks.count()
+    n_pairs = n_blocks * (n_blocks + 1) // 2 if mode == "tri" else n_blocks**2
     a = blocks.select(F.col("blk").alias("blk_a"), F.col("vecs").alias("va"))
     b = blocks.select(F.col("blk").alias("blk_b"), F.col("vecs").alias("vb"))
     cond = F.col("blk_a") <= F.col("blk_b") if mode == "tri" else F.lit(True)
-    pairs = a.join(b, cond).repartition(F.col("blk_a"), F.col("blk_b"))
-    # blocks is already cached+counted here (cache_key path), so this
-    # count is a metadata-cheap read, and the cap decision is exact.
-    if cache_key is not None and blocks.count() <= _PAIRS_CACHE_MAX_BLOCKS:
+    pairs = a.join(b, cond).repartition(
+        max(1, min(n_pairs, shuffle_parallelism(emb))), "blk_a", "blk_b"
+    )
+    if cache_key is not None and n_blocks <= _PAIRS_CACHE_MAX_BLOCKS:
         pairs = pairs.cache()
         pairs.count()
         _BLOCK_INDEX.put(emb, cache_key, f"pairs::{mode}", pairs)
     return pairs
+
+
+def _decode_block(structs, id_field: str = "vec_id", vec_field: str = "e"):
+    """One block's struct list → (int64 ids, row-normalised float64
+    matrix): the decode every blocked-GEMM kernel starts from."""
+    import numpy as np
+
+    ids = np.array([v[id_field] for v in structs], dtype=np.int64)
+    mat = np.array([v[vec_field] for v in structs], dtype=np.float64)
+    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+    return ids, mat
+
+
+def _block_pair_gemm(pairs: DataFrame, pick) -> DataFrame:
+    """(vec_a, vec_b, cos_raw) rows from one float64 GEMM per (va, vb)
+    block-pair row: ``pick(ids_a, ids_b, sims)`` returns the (row, col)
+    indices to emit, and may overwrite entries of ``sims`` it never
+    picks (masking)."""
+    import pandas as pd
+
+    def kernel(batches):
+        for pdf in batches:
+            out = []
+            for va, vb in zip(pdf["va"], pdf["vb"]):
+                ids_a, mat_a = _decode_block(va)
+                ids_b, mat_b = _decode_block(vb)
+                sims = mat_a @ mat_b.T
+                ai, bi = pick(ids_a, ids_b, sims)
+                if len(ai):
+                    out.append(
+                        pd.DataFrame(
+                            {
+                                "vec_a": ids_a[ai],
+                                "vec_b": ids_b[bi],
+                                "cos_raw": sims[ai, bi],
+                            }
+                        )
+                    )
+            yield pd.concat(out) if out else pd.DataFrame(
+                {"vec_a": pd.Series(dtype="int64"),
+                 "vec_b": pd.Series(dtype="int64"),
+                 "cos_raw": pd.Series(dtype="float64")}
+            )
+
+    return pairs.mapInPandas(kernel, "vec_a BIGINT, vec_b BIGINT, cos_raw DOUBLE")
 
 
 def blocked_topk_pairs(emb: DataFrame, k: int = 100, cache_key: str | None = None) -> DataFrame:
@@ -231,46 +291,17 @@ def blocked_topk_pairs(emb: DataFrame, k: int = 100, cache_key: str | None = Non
     pre-prune which block pairs meet at all.
     """
     import numpy as np
-    import pandas as pd
 
-    pairs = block_pairs(emb, "tri", cache_key)
+    def pick(ids_a, ids_b, sims):
+        # keep strictly vec_a < vec_b (also kills the diagonal)
+        sims[ids_a[:, None] >= ids_b[None, :]] = -np.inf
+        flat = sims.ravel()
+        take = min(k, int((flat > -np.inf).sum()))
+        if take == 0:
+            return (), ()
+        return np.unravel_index(np.argpartition(-flat, take - 1)[:take], sims.shape)
 
-    def kernel(batches):
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                ids_a = np.array([v["vec_id"] for v in row["va"]], dtype=np.int64)
-                mat_a = np.array([v["e"] for v in row["va"]], dtype=np.float64)
-                ids_b = np.array([v["vec_id"] for v in row["vb"]], dtype=np.int64)
-                mat_b = np.array([v["e"] for v in row["vb"]], dtype=np.float64)
-                mat_a /= np.linalg.norm(mat_a, axis=1, keepdims=True)
-                mat_b /= np.linalg.norm(mat_b, axis=1, keepdims=True)
-                sims = mat_a @ mat_b.T
-                # keep strictly vec_a < vec_b (also kills the diagonal)
-                mask = ids_a[:, None] >= ids_b[None, :]
-                sims[mask] = -np.inf
-                flat = sims.ravel()
-                take = min(k, int((flat > -np.inf).sum()))
-                if take == 0:
-                    continue
-                idx = np.argpartition(-flat, take - 1)[:take]
-                ai, bi = np.unravel_index(idx, sims.shape)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "vec_a": ids_a[ai],
-                            "vec_b": ids_b[bi],
-                            "cos_raw": flat[idx],
-                        }
-                    )
-                )
-            yield pd.concat(out) if out else pd.DataFrame(
-                {"vec_a": pd.Series(dtype="int64"),
-                 "vec_b": pd.Series(dtype="int64"),
-                 "cos_raw": pd.Series(dtype="float64")}
-            )
-
-    return pairs.mapInPandas(kernel, "vec_a BIGINT, vec_b BIGINT, cos_raw DOUBLE")
+    return _block_pair_gemm(block_pairs(emb, "tri", cache_key), pick)
 
 
 def blocked_threshold_pairs(
@@ -281,41 +312,11 @@ def blocked_threshold_pairs(
     one BLAS matmul. Exact (no candidate pruning) — the verify-tier twin
     of blocked_topk_pairs for threshold semantics like near-dup."""
     import numpy as np
-    import pandas as pd
 
-    pairs = block_pairs(emb, "tri", cache_key)
+    def pick(ids_a, ids_b, sims):
+        return np.nonzero((sims >= threshold) & (ids_a[:, None] < ids_b[None, :]))
 
-    def kernel(batches):
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                ids_a = np.array([v["vec_id"] for v in row["va"]], dtype=np.int64)
-                mat_a = np.array([v["e"] for v in row["va"]], dtype=np.float64)
-                ids_b = np.array([v["vec_id"] for v in row["vb"]], dtype=np.int64)
-                mat_b = np.array([v["e"] for v in row["vb"]], dtype=np.float64)
-                mat_a /= np.linalg.norm(mat_a, axis=1, keepdims=True)
-                mat_b /= np.linalg.norm(mat_b, axis=1, keepdims=True)
-                sims = mat_a @ mat_b.T
-                keep = (sims >= threshold) & (ids_a[:, None] < ids_b[None, :])
-                ai, bi = np.nonzero(keep)
-                if len(ai) == 0:
-                    continue
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "vec_a": ids_a[ai],
-                            "vec_b": ids_b[bi],
-                            "cos_raw": sims[ai, bi],
-                        }
-                    )
-                )
-            yield pd.concat(out) if out else pd.DataFrame(
-                {"vec_a": pd.Series(dtype="int64"),
-                 "vec_b": pd.Series(dtype="int64"),
-                 "cos_raw": pd.Series(dtype="float64")}
-            )
-
-    return pairs.mapInPandas(kernel, "vec_a BIGINT, vec_b BIGINT, cos_raw DOUBLE")
+    return _block_pair_gemm(block_pairs(emb, "tri", cache_key), pick)
 
 
 def blocked_knn_candidates(
@@ -331,43 +332,17 @@ def blocked_knn_candidates(
     4M-row zip_with dot-product expansion of naive all-pairs kNN.
     """
     import numpy as np
-    import pandas as pd
 
-    pairs = block_pairs(emb, "cross", cache_key)
+    def pick(ids_a, ids_b, sims):
+        sims[ids_a[:, None] == ids_b[None, :]] = -np.inf  # self
+        kk = min(k, sims.shape[1])
+        idx = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
+        rows = np.repeat(np.arange(len(ids_a)), kk)
+        cols = idx.ravel()
+        keep = sims[rows, cols] > -np.inf
+        return rows[keep], cols[keep]
 
-    def kernel(batches):
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                ids_a = np.array([v["vec_id"] for v in row["va"]], dtype=np.int64)
-                mat_a = np.array([v["e"] for v in row["va"]], dtype=np.float64)
-                ids_b = np.array([v["vec_id"] for v in row["vb"]], dtype=np.int64)
-                mat_b = np.array([v["e"] for v in row["vb"]], dtype=np.float64)
-                mat_a /= np.linalg.norm(mat_a, axis=1, keepdims=True)
-                mat_b /= np.linalg.norm(mat_b, axis=1, keepdims=True)
-                sims = mat_a @ mat_b.T
-                sims[ids_a[:, None] == ids_b[None, :]] = -np.inf  # self
-                kk = min(k, sims.shape[1])
-                idx = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-                rows = np.repeat(np.arange(len(ids_a)), kk)
-                cols = idx.ravel()
-                keep = sims[rows, cols] > -np.inf
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "vec_a": ids_a[rows[keep]],
-                            "vec_b": ids_b[cols[keep]],
-                            "cos_raw": sims[rows[keep], cols[keep]],
-                        }
-                    )
-                )
-            yield pd.concat(out) if out else pd.DataFrame(
-                {"vec_a": pd.Series(dtype="int64"),
-                 "vec_b": pd.Series(dtype="int64"),
-                 "cos_raw": pd.Series(dtype="float64")}
-            )
-
-    return pairs.mapInPandas(kernel, "vec_a BIGINT, vec_b BIGINT, cos_raw DOUBLE")
+    return _block_pair_gemm(block_pairs(emb, "cross", cache_key), pick)
 
 
 @query(
@@ -612,15 +587,15 @@ def llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partitions, and the crossJoin multiplies each row by k — at sf10
     # that is 90M dot products that would otherwise run on a handful of
     # cores, because AQE sizes by map-side bytes and is blind to join
-    # fan-out.
-    par = e.sparkSession.sparkContext.defaultParallelism
+    # fan-out. A scan that already has a split per core is left as is.
+    #
     # coalesce to a sentinel below any real cosine: a zero-norm embedding
     # makes the division NULL (non-ANSI), and max_by SKIPS rows whose
     # ordering key is NULL — the degenerate vector would silently drop
     # out of the pair search while the oracle's window keeps it. The
     # sentinel gives both engines the identical arbitrary-centroid
     # treatment (oracle mirrors with COALESCE(..., -2.0)).
-    scored = e.repartition(par).crossJoin(F.broadcast(cent)).withColumn(
+    scored = spread_to_cores(e).crossJoin(F.broadcast(cent)).withColumn(
         "cos_c",
         F.coalesce(
             dot(F.col("e"), F.col("ce")) / (F.col("n") * F.col("cn")),
@@ -915,15 +890,11 @@ def _centroid_probes_join(
     def kernel(batches):
         for pdf in batches:
             out = []
-            for _, row in pdf.iterrows():
-                vids = np.array([v["vec_id"] for v in row["vs"]], dtype=np.int64)
-                vmat = np.array([v["e"] for v in row["vs"]], dtype=np.float64)
-                vmat /= np.linalg.norm(vmat, axis=1, keepdims=True)
-                cids = np.array([c["cid"] for c in row["cs"]], dtype=np.int64)
-                cmat = np.array([c["ce"] for c in row["cs"]], dtype=np.float64)
+            for vs, cs in zip(pdf["vs"], pdf["cs"]):
+                vids, vmat = _decode_block(vs)
+                cids, cmat = _decode_block(cs, "cid", "ce")
                 order = np.argsort(cids)  # global-cid tiebreak inside the block
                 cids, cmat = cids[order], cmat[order]
-                cmat /= np.linalg.norm(cmat, axis=1, keepdims=True)
                 sims = vmat @ cmat.T
                 pp = min(nprobe, sims.shape[1])
                 idx = np.argsort(-sims, axis=1, kind="stable")[:, :pp]
@@ -1747,11 +1718,8 @@ def _pq_exact_top10(e: DataFrame) -> DataFrame:
     # spread the corpus first: the fixture parquet arrives in 1-2 scan
     # partitions and the kernel is CPU-bound (the calibration-tier
     # repartition lesson)
-    par = e.sparkSession.sparkContext.defaultParallelism
-    cand = (
-        e.select("vec_id", "e")
-        .repartition(par)
-        .mapInPandas(scan, "qid BIGINT, vec_id BIGINT, score BIGINT")
+    cand = spread_to_cores(e.select("vec_id", "e")).mapInPandas(
+        scan, "qid BIGINT, vec_id BIGINT, score BIGINT"
     )
     w_ek = Window.partitionBy("qid").orderBy(F.col("score").desc(), "vec_id")
     # explicit x_qid alias: both sides of the downstream join descend
@@ -1784,13 +1752,16 @@ def _pq_search(
     # |queries| LUT rows). Both stream a relation that arrives in 1-2
     # partitions (scan partitioning, or an AQE-coalesced exchange whose
     # map-side size is small precisely because codes are 64x smaller
-    # than vectors — AQE is blind to the fan-out). Explicit round-robin
+    # than vectors — AQE is blind to the fan-out). Round-robin
     # repartitions spread the multiplied work across the cluster; at
-    # sf1 this took the engine side from ~320s to task-parallel.
+    # sf1 this took the engine side from ~320s to task-parallel. The
+    # corpus side is a narrow map over the scan, so spread_to_cores
+    # skips it once the scan has a split per core; the codes side is an
+    # aggregate's output and always round-robins.
     par = e.sparkSession.sparkContext.defaultParallelism
     sqd_kernel = _LONG_SQDIST if _PQ_INT64_KERNELS else _DEC_SQDIST
     dot_kernel = _LONG_DOT if _PQ_INT64_KERNELS else _DEC_DOT
-    subv = _pq_sub_explode(e, F.col("e"), "vs").repartition(par)
+    subv = spread_to_cores(_pq_sub_explode(e, F.col("e"), "vs"))
     enc0 = subv.join(F.broadcast(codebook), "s").withColumn(
         "sqd", F.expr(sqd_kernel.format(a="vs", b="cs"))
     )
@@ -2315,13 +2286,8 @@ def llm_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows, columns=["aid", "alabel", "vec_id", "label", "score"]
             )
 
-    par = e.sparkSession.sparkContext.defaultParallelism
-    scored = (
-        e.repartition(par)
-        .mapInPandas(
-            scan,
-            "aid BIGINT, alabel INT, vec_id BIGINT, label INT, score BIGINT",
-        )
+    scored = spread_to_cores(e).mapInPandas(
+        scan, "aid BIGINT, alabel INT, vec_id BIGINT, label INT, score BIGINT"
     )
     pos = scored.filter(
         (F.col("label") == F.col("alabel")) & (F.col("vec_id") != F.col("aid"))

@@ -845,3 +845,32 @@ def test_block_pairs_cache_capped_by_block_count(spark, monkeypatch):
     assert len(sim._BLOCK_INDEX) == 2  # index + pairs entries
     assert under.count() == n_blocks * (n_blocks + 1) // 2 == over.count()
     sim._BLOCK_INDEX.clear()
+
+
+def test_block_pairs_partitions_sized_to_pair_count(spark, monkeypatch):
+    """AQE never coalesces a cached plan's output, so the cached
+    block-pair relation keeps the partition count it was built with,
+    and each partition is one Python task on every query over it. It
+    must hold min(#pairs, shuffle partitions) partitions, not one per
+    shuffle partition: one block at sf0.01 is one task, 4 blocks are 10
+    upper-triangle or 16 ordered pairs."""
+    from flume_hive_batch_sink_spark.io import load
+    from flume_hive_batch_sink_spark.llm import similarity as sim
+    from flume_hive_batch_sink_spark.registry import ORACLES, QUERIES
+    from oracle import compare
+
+    emb = load(spark, SF_DIR, "embeddings")
+    sim._BLOCK_INDEX.clear()
+    assert sim.block_pairs(emb, "tri", cache_key=SF_DIR).rdd.getNumPartitions() == 1
+    key = "llm_sim_topk_pairs"
+    compare(QUERIES[key](spark, SF_DIR), ORACLES[key], SF_DIR)
+
+    sim._BLOCK_INDEX.clear()
+    monkeypatch.setattr(sim, "_BLOCK", 128)
+    assert sim.block_index(emb, cache_key=SF_DIR).count() == 4
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for mode, n_pairs in (("tri", 10), ("cross", 16)):
+        pairs = sim.block_pairs(emb, mode, cache_key=SF_DIR)
+        assert pairs.count() == n_pairs
+        assert pairs.rdd.getNumPartitions() == min(n_pairs, shuffle)
+    sim._BLOCK_INDEX.clear()
