@@ -4,12 +4,16 @@ All ten tables are plain parquet; Spark's vectorized parquet reader gives
 columnar scans with predicate pushdown + column pruning for free, so the
 loader deliberately does nothing beyond ``spark.read.parquet`` — filters
 and projections belong in the operators so Catalyst can push them into
-the scan. ``data_files`` is the engine's one driver-side file lister.
+the scan. ``data_files`` is the engine's one driver-side file lister,
+``scratch_dir`` its one temp-dir maker.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
@@ -60,6 +64,17 @@ def data_files(root: str | os.PathLike) -> list[tuple[str, int]]:
                 p = os.path.join(d, f)
                 found.append((p, os.path.getsize(p)))
     return sorted(found)
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh temp dir that is removed at interpreter exit. Operators
+    return lazy DataFrames over what they write (and streams keep their
+    sources and checkpoints), so the tree must outlive the call; eager
+    cleanup is unsafe, but leaking it across a long sweep is not
+    acceptable either."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
 
 
 def _ensure_session_confs(spark: SparkSession) -> None:

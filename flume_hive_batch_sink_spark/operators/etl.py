@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from flume_hive_batch_sink_spark.io import data_files, load
+from flume_hive_batch_sink_spark.io import data_files, load, scratch_dir
 from flume_hive_batch_sink_spark.registry import query
 
 
@@ -232,10 +232,9 @@ def etl_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     so they ride as booleans."""
     import math
     import os as _os
-    import tempfile
 
     ev = load(spark, sf_dir, "events")
-    base = tempfile.mkdtemp(prefix="compact_")
+    base = scratch_dir("compact_")
     frag_dir = _os.path.join(base, "fragmented")
     out_dir = _os.path.join(base, "compacted")
     # simulate a fragmented ingest output: many writers, tiny roll size.
@@ -295,10 +294,9 @@ def etl_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     a NULL-padded union. At scale mergeSchema costs one footer read per
     file — pin the unified schema explicitly once it stabilizes."""
     import os as _os
-    import tempfile
 
     ev = load(spark, sf_dir, "events")
-    base = tempfile.mkdtemp(prefix="schema_evo_")
+    base = scratch_dir("schema_evo_")
     v1_dir = _os.path.join(base, "gen=1")
     v2_dir = _os.path.join(base, "gen=2")
     ev.filter(F.col("event_id") % 2 == 0).select(

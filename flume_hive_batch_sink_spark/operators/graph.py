@@ -25,7 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flume_hive_batch_sink_spark.io import data_files, load
+from flume_hive_batch_sink_spark.io import data_files, load, scratch_dir
 from flume_hive_batch_sink_spark.registry import query
 
 # Supplier node ids are offset into a disjoint range so the bipartite
@@ -349,15 +349,9 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explicitly reclaimed at interpreter exit — repeated calls reuse
     # ONE dir (the first-set checkpoint dir wins) instead of
     # accumulating R edge-list snapshots per call in /tmp.
-    import atexit
-    import shutil
-    import tempfile
-
     sc = spark.sparkContext
     if sc._jsc.sc().getCheckpointDir().isEmpty():
-        chk = tempfile.mkdtemp(prefix="graph_chk_")
-        atexit.register(shutil.rmtree, chk, ignore_errors=True)
-        sc.setCheckpointDir(chk)
+        sc.setCheckpointDir(scratch_dir("graph_chk_"))
     # Checkpoint cadence, VOLUME-GATED (round-16). At scale the
     # dominant per-round cost is the reliable checkpoint WRITE of the
     # (shrinking) edge list, so big inputs checkpoint every SECOND

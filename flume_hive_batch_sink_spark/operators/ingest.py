@@ -24,12 +24,11 @@ anyway, so it goes to the writer unshuffled. File size is bounded by
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flume_hive_batch_sink_spark.io import data_files, load
+from flume_hive_batch_sink_spark.io import data_files, load, scratch_dir
 from flume_hive_batch_sink_spark.partitioning import fits_one_task
 from flume_hive_batch_sink_spark.registry import query
 
@@ -147,7 +146,7 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round("value", 4).alias("value"),
     )
-    out = os.path.join(tempfile.mkdtemp(prefix="csv_roundtrip_"), "events_tsv")
+    out = os.path.join(scratch_dir("csv_roundtrip_"), "events_tsv")
     ev.write.mode("overwrite").option("sep", "\t").option("header", "false").csv(out)
     back = (
         spark.read.schema(
@@ -327,7 +326,7 @@ def hive_partitioned_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts the oracle computes.
     """
     ev = with_partition_keys(load(spark, sf_dir, "events"))
-    out = os.path.join(tempfile.mkdtemp(prefix="hive_write_"), "events_tbl")
+    out = os.path.join(scratch_dir("hive_write_"), "events_tbl")
     hive_partitioned_write_path(ev, out)
     back = spark.read.parquet(out)
     return back.groupBy(F.col("dt").cast("string").alias("dt"), "hr").agg(
@@ -350,7 +349,7 @@ def file_roll_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged. (File-count bound itself is asserted in tests/.)
     """
     ev = with_partition_keys(load(spark, sf_dir, "events"))
-    out = os.path.join(tempfile.mkdtemp(prefix="file_roll_"), "events_tbl")
+    out = os.path.join(scratch_dir("file_roll_"), "events_tbl")
     hive_partitioned_write_path(
         ev, out, partition_cols=("hr",), max_records_per_file=500
     )
@@ -367,7 +366,7 @@ def file_roll_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
 def done_marker(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Completed-partition `_DONE` markers for downstream schedulers."""
     ev = with_partition_keys(load(spark, sf_dir, "events"))
-    out = os.path.join(tempfile.mkdtemp(prefix="done_marker_"), "events_tbl")
+    out = os.path.join(scratch_dir("done_marker_"), "events_tbl")
     hive_partitioned_write_path(ev, out, partition_cols=("dt",))
     write_done_markers(spark, out)
     rows = [
@@ -400,12 +399,11 @@ def register_catalog_partitions(
     import hashlib
 
     from flume_hive_batch_sink_spark.sources import metastore as ms
-    from flume_hive_batch_sink_spark.streaming.harness import _tmpdir
     from flume_hive_batch_sink_spark.streaming.source import EVENTS_SCHEMA
 
     cfg = metastore_cfg or ms.MetastoreConfig()
     ev = with_partition_keys(load(spark, sf_dir, "events"))
-    out = os.path.join(_tmpdir("catalog_tbl_"), "events_tbl")
+    out = os.path.join(scratch_dir("catalog_tbl_"), "events_tbl")
     hive_partitioned_write_path(ev, out)
 
     tbl = "evcat_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]

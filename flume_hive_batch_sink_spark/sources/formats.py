@@ -16,12 +16,11 @@ from __future__ import annotations
 
 import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flume_hive_batch_sink_spark.io import load
+from flume_hive_batch_sink_spark.io import load, scratch_dir
 from flume_hive_batch_sink_spark.registry import query
 
 
@@ -69,7 +68,7 @@ def scan_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events_projection(spark, sf_dir).withColumn(
         "ts", F.date_format("ts", "yyyy-MM-dd HH:mm:ss")
     )
-    out = os.path.join(tempfile.mkdtemp(prefix="json_roundtrip_"), "events_json")
+    out = os.path.join(scratch_dir("json_roundtrip_"), "events_json")
     ev.write.mode("overwrite").json(out)
     back = spark.read.schema(
         "event_id BIGINT, ts STRING, user_id BIGINT, event_type STRING, value DOUBLE"
@@ -90,7 +89,7 @@ def scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     files in; types (incl. TIMESTAMP) survive natively, no string hop.
     """
     ev = _events_projection(spark, sf_dir)
-    out = os.path.join(tempfile.mkdtemp(prefix="orc_roundtrip_"), "events_orc")
+    out = os.path.join(scratch_dir("orc_roundtrip_"), "events_orc")
     ev.write.mode("overwrite").orc(out)
     return spark.read.orc(out)
 
@@ -141,7 +140,7 @@ def scan_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "--packages org.apache.spark:spark-avro_2.13:<spark version>"
         )
     ev = _events_projection(spark, sf_dir)
-    out = os.path.join(tempfile.mkdtemp(prefix="avro_roundtrip_"), "events_avro")
+    out = os.path.join(scratch_dir("avro_roundtrip_"), "events_avro")
     ev.write.mode("overwrite").format("avro").save(out)
     return spark.read.format("avro").load(out)
 

@@ -9,24 +9,103 @@ pass-through smoke) are directly batch-expressible, and the
 watermark/late-data key pins its micro-batch boundaries (one mtime-ordered
 chunk per batch) so the append-mode emission rule itself is replayed in
 SQL; tests/test_streaming.py asserts the late-drop counts besides.
+
+Each stateful key's dataflow is a module-level builder over a streaming
+DataFrame (``event_type_totals``, ``dedup_within_watermark``,
+``hourly_window_counts``, ``purchase_signup_join``,
+``per_user_counts``), so the state-scale rehearsal
+(scripts/stream_scale.py) and the tests run the keys' own dataflows.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flume_hive_batch_sink_spark.io import load
+from flume_hive_batch_sink_spark.io import load, scratch_dir
+from flume_hive_batch_sink_spark.partitioning import scoped_conf
 from flume_hive_batch_sink_spark.registry import query
-from flume_hive_batch_sink_spark.streaming import harness, sink
+from flume_hive_batch_sink_spark.streaming import harness, sink, source
+
+_WM_DELAY = "10 minutes"
 
 
-def _qname(prefix: str) -> str:
-    return f"{prefix}_{uuid.uuid4().hex[:8]}"
+def event_type_totals(stream: DataFrame) -> DataFrame:
+    """Per-event_type count and rounded value sum (complete mode)."""
+    return stream.groupBy("event_type").agg(
+        F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value")
+    )
+
+
+def dedup_within_watermark(stream: DataFrame) -> DataFrame:
+    """Drop redelivered event_ids within a 10-minute watermark."""
+    return stream.withWatermark("ts", _WM_DELAY).dropDuplicatesWithinWatermark(
+        ["event_id"]
+    )
+
+
+def hourly_window_counts(stream: DataFrame) -> DataFrame:
+    """Watermarked 1-hour tumbling-window counts (append mode emits a
+    window once the watermark passes its end)."""
+    return (
+        stream.withWatermark("ts", _WM_DELAY)
+        .groupBy(F.window("ts", "1 hour").alias("w"))
+        .agg(F.count("*").alias("n"))
+        .select(F.col("w.start").alias("ws"), "n")
+    )
+
+
+def purchase_signup_join(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Purchases (from ``left``) within 2 h after a signup (from
+    ``right``) by the same user: a stream-stream range join with 1-hour
+    watermarks on both sides."""
+    purchases = (
+        left.filter(F.col("event_type") == "purchase")
+        .withWatermark("ts", "1 hour")
+        .alias("p")
+    )
+    signups = (
+        right.filter(F.col("event_type") == "signup")
+        .withWatermark("ts", "1 hour")
+        .alias("s")
+    )
+    return purchases.join(
+        signups,
+        F.expr(
+            "p.user_id = s.user_id AND p.ts >= s.ts "
+            "AND p.ts <= s.ts + INTERVAL 2 HOUR"
+        ),
+    ).select(
+        F.col("p.event_id").alias("purchase_id"),
+        F.col("s.event_id").alias("signup_id"),
+    )
+
+
+def per_user_counts(stream: DataFrame) -> DataFrame:
+    """Per-user running event count in explicit ``GroupState``
+    (``applyInPandasWithState``, NoTimeout, update mode): each batch
+    emits the group's updated total. The update fn is defined here so
+    it ships to the Python workers by value."""
+    import pandas as pd
+
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    def update(key, pdfs, state):
+        n = state.get[0] if state.exists else 0
+        for pdf in pdfs:
+            n += len(pdf)
+        state.update((n,))
+        yield pd.DataFrame({"user_id": [key[0]], "n_events": [n]})
+
+    return stream.groupBy("user_id").applyInPandasWithState(
+        update,
+        "user_id BIGINT, n_events BIGINT",
+        "n BIGINT",
+        "update",
+        GroupStateTimeout.NoTimeout,
+    )
 
 
 def _sink_table(
@@ -37,9 +116,8 @@ def _sink_table(
     keyed repartition (skipped for a small one-split epoch) sizes itself
     from spark.sql.shuffle.partitions, scoped here to the stream's
     volume."""
-    with harness._state_conf_scope(
-        spark, harness.events_stream_partitions(sf_dir)
-    ):
+    n = harness.events_stream_partitions(sf_dir)
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(n)}):
         sink.start_hive_sink(stream_df, out_dir).awaitTermination()
     sink.finalize_partitions(spark, out_dir)
     return sink.read_sink_table(spark, out_dir)
@@ -55,12 +133,9 @@ def _sink_table(
 def stream_agg_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful streaming aggregation, complete output mode: the final
     state must equal the batch aggregate regardless of batching."""
-    s = harness.events_stream(spark, sf_dir)
-    agg = s.groupBy("event_type").agg(
-        F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value")
-    )
+    agg = event_type_totals(harness.events_stream(spark, sf_dir))
     return harness.run_with_progress(
-        agg, _qname("agg_update"), "complete", spark,
+        agg, "agg_update", "complete", spark,
         state_partitions=harness.events_stream_partitions(sf_dir),
     )[0]
 
@@ -76,12 +151,8 @@ def stream_dedup_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     event delivered twice — Flume at-least-once redelivery) and
     `dropDuplicatesWithinWatermark` restores effectively-once."""
     s = harness.events_stream(spark, sf_dir)
-    doubled = s.union(s)
-    deduped = doubled.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
     out = harness.run_with_progress(
-        deduped, _qname("dedup_wm"), "append", spark,
+        dedup_within_watermark(s.union(s)), "dedup_wm", "append", spark,
         state_partitions=harness.events_stream_partitions(sf_dir),
     )[0]
     return out.groupBy("event_type").agg(F.count("*").alias("n"))
@@ -114,14 +185,8 @@ def stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule in SQL; tests/test_streaming.py additionally asserts the
     dropped-window counts."""
     s = harness.replay_chunks(spark, sf_dir, n_chunks=4, late_chunk=True)
-    agg = (
-        s.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count("*").alias("n"))
-        .select(F.col("w.start").alias("ws"), "n")
-    )
     return harness.run_with_progress(
-        agg, _qname("watermark"), "append", spark,
+        hourly_window_counts(s), "watermark", "append", spark,
         state_partitions=harness.events_stream_partitions(sf_dir),
     )[0]
 
@@ -141,30 +206,12 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermarks on both sides — purchases within 2h after a signup. Inner
     join results are batching-invariant, so the batch range join is an
     exact oracle."""
-    purchases = (
-        harness.events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "1 hour")
-        .alias("p")
-    )
-    signups = (
-        harness.events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "signup")
-        .withWatermark("ts", "1 hour")
-        .alias("s")
-    )
-    joined = purchases.join(
-        signups,
-        F.expr(
-            "p.user_id = s.user_id AND p.ts >= s.ts "
-            "AND p.ts <= s.ts + INTERVAL 2 HOUR"
-        ),
-    ).select(
-        F.col("p.event_id").alias("purchase_id"),
-        F.col("s.event_id").alias("signup_id"),
+    joined = purchase_signup_join(
+        harness.events_stream(spark, sf_dir),
+        harness.events_stream(spark, sf_dir),
     )
     return harness.run_with_progress(
-        joined, _qname("ss_join"), "append", spark,
+        joined, "ss_join", "append", spark,
         state_partitions=harness.events_stream_partitions(sf_dir),
     )[0]
 
@@ -181,7 +228,7 @@ def stream_foreachbatch_hive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE reference replacement (BASELINE.json:7): stream → foreachBatch
     → Hive-partitioned table with idempotent epoch writes + done markers.
     The re-read table's per-partition counts must equal the source."""
-    out_dir = os.path.join(harness._tmpdir("stream_hive_"), "events_tbl")
+    out_dir = os.path.join(scratch_dir("stream_hive_"), "events_tbl")
     s = harness.events_stream(spark, sf_dir)
     table = _sink_table(spark, s, out_dir, sf_dir)
     return table.groupBy(
@@ -200,7 +247,7 @@ def stream_rate_source_smoke(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself, batch-expressible regardless of micro-batch boundaries."""
     s = harness.replay_chunks(spark, sf_dir, n_chunks=3, late_chunk=False)
     return harness.run_with_progress(
-        s.select("event_id", "event_type"), _qname("replay_smoke"), "append", spark,
+        s.select("event_id", "event_type"), "replay_smoke", "append", spark,
         state_partitions=harness.events_stream_partitions(sf_dir),
     )[0]
 
@@ -220,28 +267,9 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     escape hatch for stateful semantics Spark's built-in streaming
     aggregates can't express (custom eviction, per-group machines).
     """
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     s = harness.replay_chunks(spark, sf_dir, n_chunks=4)
-
-    def update(key, pdfs, state: GroupState):
-        n = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            n += len(pdf)
-        state.update((n,))
-        yield pd.DataFrame({"user_id": [key[0]], "n_events": [n]})
-
-    out = s.groupBy("user_id").applyInPandasWithState(
-        update,
-        "user_id BIGINT, n_events BIGINT",
-        "n BIGINT",
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
     emitted = harness.run_with_progress(
-        out, _qname("custom_state"), "update", spark,
+        per_user_counts(s), "custom_state", "update", spark,
         state_partitions=harness.events_stream_partitions(sf_dir),
     )[0]
     return emitted.groupBy("user_id").agg(F.max("n_events").alias("n_events"))
@@ -269,19 +297,19 @@ def stream_text_ingest_hive(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch keys cover piecewise: serialize → file stream → parse →
     partitioned write → finalize → read-back.
 
-    The text staging happens EXECUTOR-SIDE: chunk id is a deterministic
-    function of the event DATE (``pmod(unix_date(ts::date), 4)`` — the
-    final table state is batching-invariant, so any deterministic
-    chunking works) and ``write.partitionBy("chunk").csv`` serializes
-    every chunk in one distributed pass; nothing is collected to the
-    driver and no WindowExec appears anywhere in the plan. Pinned
-    mtimes + maxFilesPerTrigger = ⌈n_files/2⌉ deliver exactly two real
-    micro-batches, so multiple epochs still hit the epoch-overwrite
-    path while paying the ~2 s fixed per-epoch cost (foreachBatch
-    round-trip + commit) twice instead of once per file. A chunk whose
-    files straddle the epoch boundary lands one (dt, hr) in both
-    epoch= subtrees — harmless: epochs own disjoint directories and
-    the read-back drops the epoch column.
+    The text staging happens EXECUTOR-SIDE through the one ordered
+    stager (``source.stage_text_chunks``): chunk id is a deterministic
+    function of the event DATE (the final table state is
+    batching-invariant, so any deterministic chunking works), every
+    chunk is serialized in one distributed write, nothing is collected
+    to the driver and no WindowExec appears anywhere in the plan.
+    Pinned mtimes + maxFilesPerTrigger = ⌈n_files/2⌉ deliver exactly
+    two real micro-batches, so multiple epochs still hit the
+    epoch-overwrite path while paying the fixed per-epoch cost
+    (foreachBatch round-trip + commit) twice instead of once per file.
+    A chunk whose files straddle the epoch boundary lands one (dt, hr)
+    in both epoch= subtrees — harmless: epochs own disjoint directories
+    and the read-back drops the epoch column.
 
     Chunking by DATE (not by event_id hash) is what Flume's channel
     actually delivers — a roughly time-ordered drain — and it is the
@@ -295,65 +323,14 @@ def stream_text_ingest_hive(spark: SparkSession, sf_dir: str) -> DataFrame:
     Timestamps are serialized with microseconds ('.SSSSSS'), so the
     landed table equals the source at full timestamp precision.
     """
-    import glob
-    import shutil
-    import time as _time
-
-    ev = load(spark, sf_dir, "events")
+    src, n_files = source.stage_text_chunks(spark, sf_dir)
     # the returned DataFrame lazily reads out_dir, so the tree must
-    # outlive this call — _tmpdir reclaims it at interpreter exit
-    base = harness._tmpdir("stream_text_ingest_")
-    src = os.path.join(base, "text_src")
-    staging = os.path.join(base, "text_staging")
-    out_dir = os.path.join(base, "events_tbl")
-    os.makedirs(src, exist_ok=True)
-
-    (
-        ev.select(
-            F.pmod(F.unix_date(F.to_date("ts")), F.lit(4)).alias("chunk"),
-            F.col("event_id").cast("string").alias("c0"),
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("c1"),
-            F.col("user_id").cast("string").alias("c2"),
-            F.col("event_type").alias("c3"),
-            F.round("value", 4).cast("string").alias("c4"),
-        )
-        # a few files per chunk at this scale (the sub-split widens the
-        # µs-timestamp-formatting write from 4 tasks to up to 32); at
-        # 100 TB drop the repartition and let every task roll its own
-        # chunk files — each extra file is just more micro-batch input
-        .repartition(F.col("chunk"), F.pmod(F.xxhash64("c0"), F.lit(8)))
-        .write.mode("overwrite")
-        .option("sep", "\t")
-        .partitionBy("chunk")
-        .csv(staging)
-    )
-    # arrival order: move chunk files into the source dir with strictly
-    # increasing mtimes (the file source lists oldest-first)
-    now = _time.time()
-    n_files = 0
-    for c in range(4):
-        parts = sorted(glob.glob(os.path.join(staging, f"chunk={c}", "part-*")))
-        for i, p in enumerate(parts):
-            dst = os.path.join(src, f"chunk_{c:03d}_{i:03d}.tsv")
-            shutil.move(p, dst)
-            t = now + c + i / 100.0
-            os.utime(dst, (t, t))
-            n_files += 1
-    shutil.rmtree(staging, ignore_errors=True)
-
-    parsed_schema = (
-        "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
-        "event_type STRING, value DOUBLE"
-    )
-    s = (
-        spark.readStream.schema(parsed_schema)
-        .option("sep", "\t")
-        .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-        # exactly TWO micro-batches whatever the staged file count: the
-        # multi-epoch overwrite path stays exercised while the ~2 s
-        # fixed per-epoch cost is paid twice, not once per file
-        .option("maxFilesPerTrigger", max(1, (n_files + 1) // 2))
-        .csv(src)
+    # outlive this call — scratch_dir reclaims it at interpreter exit
+    out_dir = os.path.join(scratch_dir("stream_text_ingest_"), "events_tbl")
+    # exactly TWO micro-batches whatever the staged file count
+    s = source.read_text_wire(
+        spark.readStream.option("maxFilesPerTrigger", max(1, (n_files + 1) // 2)),
+        src,
     )
     table = _sink_table(spark, s, out_dir, sf_dir)
     return table.groupBy(
@@ -399,6 +376,6 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("sum_value"),
     )
     return harness.run_with_progress(
-        agg, _qname("static_join"), "complete", spark,
+        agg, "static_join", "complete", spark,
         state_partitions=harness.events_stream_partitions(sf_dir),
     )[0]

@@ -25,8 +25,6 @@ deterministic because the replay is ts-ordered.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -63,6 +61,27 @@ _SESSION_ORACLE = """
 """
 
 
+def session_windows(stream: DataFrame) -> DataFrame:
+    """Per-user 6 h-gap session windows behind a 10-minute watermark:
+    count and DECIMAL value sum per session, keyed by session start."""
+    return (
+        stream.withWatermark("ts", _WM_DELAY)
+        .groupBy("user_id", F.session_window("ts", _GAP).alias("w"))
+        .agg(
+            F.count("*").alias("n_events"),
+            F.round(F.sum(F.col("value").cast("decimal(18,4)")), 2)
+            .cast("double")
+            .alias("sum_value"),
+        )
+        .select(
+            "user_id",
+            F.col("w.start").alias("session_start"),
+            "n_events",
+            "sum_value",
+        )
+    )
+
+
 @query("stream_session_window", oracle=_SESSION_ORACLE)
 def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming per-user session windows (6 h gap), append mode over a
@@ -81,25 +100,8 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     larger gap starts a new session. The oracle's island break is
     therefore strict ``> INTERVAL 6 HOUR``. DECIMAL-cast sums keep
     accumulation order irrelevant across engines."""
-    s = harness.replay_chunks(spark, sf_dir, n_chunks=4)
-    agg = (
-        s.withWatermark("ts", _WM_DELAY)
-        .groupBy("user_id", F.session_window("ts", _GAP).alias("w"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,4)")), 2)
-            .cast("double")
-            .alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            "n_events",
-            "sum_value",
-        )
-    )
-    name = f"session_win_{uuid.uuid4().hex[:8]}"
     return harness.run_with_progress(
-        agg, name, "append", spark,
+        session_windows(harness.replay_chunks(spark, sf_dir, n_chunks=4)),
+        "session_win", "append", spark,
         state_partitions=harness.events_stream_partitions(sf_dir),
     )[0]

@@ -12,14 +12,11 @@ idempotent epoch writes = exactly-once table state (SURVEY.md §3.3).
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from flume_hive_batch_sink_spark.io import scratch_dir
 from flume_hive_batch_sink_spark.operators.ingest import (
     hive_partitioned_write_path,
     with_partition_keys,
@@ -56,9 +53,7 @@ def start_hive_sink(
     checkpoint_dir: str | None = None,
 ) -> StreamingQuery:
     """writeStream.foreachBatch(hive-partitioned write), availableNow."""
-    chk = checkpoint_dir or tempfile.mkdtemp(prefix="chk_hive_sink_")
-    if checkpoint_dir is None:
-        atexit.register(shutil.rmtree, chk, ignore_errors=True)
+    chk = checkpoint_dir or scratch_dir("chk_hive_sink_")
     return (
         stream_df.writeStream.foreachBatch(
             lambda df, eid: write_epoch(df, eid, out_dir)

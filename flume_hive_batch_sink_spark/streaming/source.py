@@ -11,6 +11,13 @@ transport is a config choice:
 - ``file``/``file-chunks``: the deterministic fixture-replay harness
   (what tests and the driver run). ``file-chunks`` pins one
   mtime-ordered file per micro-batch for watermark semantics.
+  ``stage_in_order`` is the one ordered-replay stager: one
+  executor-side write partitioned by chunk, then the chunk files move
+  into the source dir with strictly increasing mtimes. Sentinel
+  events (watermark drain barriers) are literal rows over the in-plan
+  ``max(ts)``, unioned into that same write as the last chunks. The
+  delimited-text wire (``encode_text_wire``/``read_text_wire``) stages
+  through the same stager (``stage_text_chunks``).
 - ``kafka``: the production wiring — ``format("kafka")`` with
   bootstrap servers/topic/offsets config, value decoded from JSON by
   ``decode_kafka_events``. The decode step is pure column
@@ -30,13 +37,14 @@ file-replay path has.
 from __future__ import annotations
 
 import os
+import shutil
 import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flume_hive_batch_sink_spark.io import load
+from flume_hive_batch_sink_spark.io import load, scratch_dir
 
 EVENTS_SCHEMA = (
     "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
@@ -82,12 +90,6 @@ class SourceConfig:
     rows_per_second: int = 1000
 
 
-def _tmpdir(prefix: str) -> str:
-    from flume_hive_batch_sink_spark.streaming.harness import _tmpdir as t
-
-    return t(prefix)
-
-
 def open_events_stream(spark: SparkSession, cfg: SourceConfig) -> DataFrame:
     """The seam: an unbounded DataFrame in the canonical events schema,
     whatever the transport. ``stream_*`` keys consume only this."""
@@ -109,9 +111,78 @@ def open_events_stream(spark: SparkSession, cfg: SourceConfig) -> DataFrame:
 
 def _file_stream(spark: SparkSession, cfg: SourceConfig) -> DataFrame:
     """The whole events fixture as one availableNow micro-batch."""
-    staged = os.path.join(_tmpdir("stream_src_"), "events")
+    staged = os.path.join(scratch_dir("stream_src_"), "events")
     load(spark, cfg.sf_dir, "events").write.mode("overwrite").parquet(staged)
     return spark.readStream.schema(EVENTS_SCHEMA).parquet(staged)
+
+
+def stage_in_order(
+    chunked: DataFrame,
+    order,
+    fmt: str = "parquet",
+    one_file_per_chunk: bool = True,
+    **options,
+) -> tuple[str, int]:
+    """The one ordered-replay stager: write ``chunked`` partitioned by
+    its ``chunk`` column in ONE executor-side job, then move each
+    chunk's part files, chunk by chunk in ``order``, into a fresh
+    ``$TMPDIR/stream_replay_*/src`` as ``chunk_NNN.<fmt>`` (NNN = the
+    arrival index) with strictly increasing mtimes. The file source
+    lists oldest-first, so the mtimes pin the replay order. No
+    data-sized result crosses the driver; it only renames files.
+
+    With ``one_file_per_chunk`` every chunk must land as exactly one
+    file (the caller repartitions on ``chunk``, so all of a chunk's rows
+    sit in one task), which makes each chunk one micro-batch under
+    ``maxFilesPerTrigger=1``. Returns ``(src, n_files)``."""
+    base = scratch_dir("stream_replay_")
+    src = os.path.join(base, "src")
+    stage = os.path.join(base, "stage")
+    os.makedirs(src)
+    now = time.time()
+    (
+        chunked.write.partitionBy("chunk")
+        .mode("overwrite")
+        .options(**options)
+        .format(fmt)
+        .save(stage)
+    )
+    k = 0
+    for c in order:
+        cdir = os.path.join(stage, f"chunk={c}")
+        names = sorted(os.listdir(cdir)) if os.path.isdir(cdir) else []
+        parts = [f for f in names if f.startswith("part-")]
+        if one_file_per_chunk:
+            assert len(parts) == 1, f"chunk {c}: expected 1 file, got {parts}"
+        for part in parts:
+            path = os.path.join(src, f"chunk_{k:03d}.{fmt}")
+            os.replace(os.path.join(cdir, part), path)
+            os.utime(path, (now + k, now + k))
+            k += 1
+    shutil.rmtree(stage, ignore_errors=True)
+    return src, k
+
+
+def _sentinel_rows(ev: DataFrame, offsets: list, first_chunk: int) -> DataFrame:
+    """One event per offset (minutes past the fixture's max ts), as
+    JVM-side literal rows over the in-plan ``max(ts)``: sentinel j has
+    event_id -(j+1), user_id -1, event_type 'sentinel' and chunk
+    ``first_chunk + j``. No driver collect, no createDataFrame, so the
+    sentinels ride in the chunks' one write."""
+    lits = F.array(*[F.lit(int(o)) for o in offsets])
+    return (
+        ev.agg(F.max("ts").alias("m"))
+        .select("m", F.posexplode(lits).alias("j", "off"))
+        .select(
+            (-(F.col("j") + 1)).cast("bigint").alias("event_id"),
+            (F.col("m") + F.make_dt_interval(mins=F.col("off"))).alias("ts"),
+            F.lit(-1).cast("bigint").alias("user_id"),
+            F.lit("sentinel").alias("event_type"),
+            F.lit(0.0).alias("value"),
+            F.lit(None).cast("string").alias("props"),
+            (F.col("j") + first_chunk).alias("chunk"),
+        )
+    )
 
 
 def _file_chunk_stream(spark: SparkSession, cfg: SourceConfig) -> DataFrame:
@@ -119,81 +190,87 @@ def _file_chunk_stream(spark: SparkSession, cfg: SourceConfig) -> DataFrame:
 
     With ``late_chunk`` the FIRST chunk (oldest events) is replayed
     LAST — after newer chunks advanced the watermark — so its rows
-    arrive late. File order is pinned via mtime (the file source lists
-    by modification time) and ``maxFilesPerTrigger=1``.
-
-    The chunk files are written EXECUTOR-side in one job — repartition
-    on the chunk id, ``partitionBy("chunk")`` — so exactly one part
-    file lands per chunk directory (all rows of a chunk hash to one
-    task) and no data-sized ``toPandas()`` ever crosses the driver;
-    the driver only renames files and touches mtimes. The ntile window
-    itself is a deliberate global sort: the harness's determinism
-    contract (ts-ordered chunks) requires a total order, and the
-    production transport is the Kafka seam, not this replay path.
+    arrive late. Sentinel rows (``sentinel_offsets_min``) follow as one
+    single-row chunk each, after every data chunk. Chunks, sentinels
+    included, are staged by ``stage_in_order`` in one job, repartitioned
+    on the chunk id so each lands as one file, and replayed with
+    ``maxFilesPerTrigger=1``. The ntile window itself is a deliberate
+    global sort: the harness's determinism contract (ts-ordered chunks)
+    requires a total order, and the production transport is the Kafka
+    seam, not this replay path.
     """
-    import shutil
-
     from pyspark.sql.window import Window
 
     ev = load(spark, cfg.sf_dir, "events")
-    chunk = F.ntile(cfg.n_chunks).over(Window.orderBy("ts", "event_id"))
-    with_chunk = ev.withColumn("chunk", chunk)
-    base = _tmpdir("stream_replay_")
-    src = os.path.join(base, "src")
-    stage = os.path.join(base, "stage")
-    os.makedirs(src, exist_ok=True)
-
-    order = list(range(1, cfg.n_chunks + 1))
+    n = cfg.n_chunks
+    chunked = ev.withColumn(
+        "chunk", F.ntile(n).over(Window.orderBy("ts", "event_id"))
+    )
+    order = list(range(1, n + 1))
     if cfg.late_chunk:
         order = order[1:] + order[:1]  # oldest chunk arrives last
-    now = time.time()
-    (
-        with_chunk.repartition(cfg.n_chunks, "chunk")
-        .write.partitionBy("chunk")
-        .mode("overwrite")
-        .parquet(stage)
-    )
-    for i, c in enumerate(order):
-        cdir = os.path.join(stage, f"chunk={c}")
-        parts = [f for f in os.listdir(cdir) if f.startswith("part-")]
-        assert len(parts) == 1, f"chunk {c}: expected 1 file, got {parts}"
-        path = os.path.join(src, f"chunk_{i:03d}.parquet")
-        os.replace(os.path.join(cdir, parts[0]), path)
-        os.utime(path, (now + i, now + i))
-    shutil.rmtree(stage, ignore_errors=True)
-
-    if cfg.sentinel_offsets_min:
-        import datetime as _dt
-
-        # bounded scalar pull: one max(ts) — the sentinel timestamps
-        # must sit past the whole fixture whatever the SF
-        max_ts = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
-        for j, off in enumerate(sorted(cfg.sentinel_offsets_min)):
-            row = (
-                -(j + 1),
-                max_ts + _dt.timedelta(minutes=int(off)),
-                -1,
-                "sentinel",
-                0.0,
-                None,
-            )
-            sdir = os.path.join(base, f"sentinel_stage_{j}")
-            spark.createDataFrame([row], EVENTS_SCHEMA).coalesce(
-                1
-            ).write.mode("overwrite").parquet(sdir)
-            parts = [f for f in os.listdir(sdir) if f.startswith("part-")]
-            assert len(parts) == 1
-            k = cfg.n_chunks + j
-            path = os.path.join(src, f"chunk_{k:03d}.parquet")
-            os.replace(os.path.join(sdir, parts[0]), path)
-            os.utime(path, (now + k, now + k))
-            shutil.rmtree(sdir, ignore_errors=True)
-
+    offsets = sorted(cfg.sentinel_offsets_min)
+    if offsets:
+        chunked = chunked.unionByName(_sentinel_rows(ev, offsets, n + 1))
+        order += range(n + 1, n + 1 + len(offsets))
+    src, _ = stage_in_order(chunked.repartition(len(order), "chunk"), order)
     return (
         spark.readStream.schema(EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .option("latestFirst", "false")
         .parquet(src)
+    )
+
+
+# --------------------------------------------------------------------------
+# delimited-text wire (the reference's serialize_text_line format)
+# --------------------------------------------------------------------------
+
+TEXT_WIRE_SCHEMA = (
+    "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
+    "event_type STRING, value DOUBLE"
+)
+TEXT_WIRE_OPTIONS = {"sep": "\t", "timestampFormat": KAFKA_TS_FORMAT}
+
+
+def encode_text_wire(ev: DataFrame, chunk) -> DataFrame:
+    """Canonical events → delimited-text wire rows: five string fields
+    (µs timestamps, values rounded to 4 places) plus the ``chunk``
+    column ``stage_in_order`` splits on. ``read_text_wire`` is the
+    inverse."""
+    return ev.select(
+        chunk.alias("chunk"),
+        F.col("event_id").cast("string").alias("c0"),
+        F.date_format("ts", KAFKA_TS_FORMAT).alias("c1"),
+        F.col("user_id").cast("string").alias("c2"),
+        F.col("event_type").alias("c3"),
+        F.round("value", 4).cast("string").alias("c4"),
+    )
+
+
+def read_text_wire(reader, path: str) -> DataFrame:
+    """Parse wire files with the declared schema; ``reader`` is
+    ``spark.read`` or ``spark.readStream`` (with any options set)."""
+    return reader.schema(TEXT_WIRE_SCHEMA).options(**TEXT_WIRE_OPTIONS).csv(path)
+
+
+def stage_text_chunks(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
+    """Stage the events fixture as wire files, four chunks by event DATE
+    (``pmod(unix_date, 4)``: a roughly time-ordered drain, as Flume's
+    channel delivers) in chunk order. Each chunk is sub-split into a few
+    files (``pmod(xxhash64(event_id), 8)``), widening the µs-timestamp
+    formatting write from 4 tasks to up to 32. Returns
+    ``(src, n_files)``."""
+    wire = encode_text_wire(
+        load(spark, sf_dir, "events"),
+        F.pmod(F.unix_date(F.to_date("ts")), F.lit(4)),
+    )
+    return stage_in_order(
+        wire.repartition(F.col("chunk"), F.pmod(F.xxhash64("c0"), F.lit(8))),
+        range(4),
+        "csv",
+        one_file_per_chunk=False,
+        **TEXT_WIRE_OPTIONS,
     )
 
 
@@ -318,8 +395,14 @@ def _rate_stream(spark: SparkSession, cfg: SourceConfig) -> DataFrame:
 __all__ = [
     "EVENTS_SCHEMA",
     "KAFKA_WIRE_SCHEMA",
+    "TEXT_WIRE_OPTIONS",
+    "TEXT_WIRE_SCHEMA",
     "SourceConfig",
     "decode_kafka_events",
+    "encode_text_wire",
     "kafka_available",
     "open_events_stream",
+    "read_text_wire",
+    "stage_in_order",
+    "stage_text_chunks",
 ]

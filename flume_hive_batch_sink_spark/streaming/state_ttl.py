@@ -65,7 +65,7 @@ _WM_DELAY = "10 minutes"
 # second's micro-batch then FIRES the remaining timeouts (timeout checks
 # in batch i compare against the watermark set by batches < i) — no
 # reliance on the trailing no-data batch
-_SENTINELS = (120, 240)
+SENTINELS_MIN = (120, 240)
 
 _TTL_ORACLE = """
     SELECT user_id, count(*) AS n_events FROM events GROUP BY user_id
@@ -135,14 +135,11 @@ def stream_custom_state_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     when the watermark evicts an idle user; the sentinels guarantee
     every real user drains, so the per-user SUM of emitted session
     counts equals the batch aggregate."""
-    import uuid
-
-    src = harness.replay_chunks_with_sentinels(
-        spark, sf_dir, n_chunks=4, sentinel_offsets_min=_SENTINELS
+    src = harness.replay_chunks(
+        spark, sf_dir, n_chunks=4, sentinel_offsets_min=SENTINELS_MIN
     )
-    out = ttl_counters_stream(spark, src)
     emitted = harness.run_with_progress(
-        out, f"custom_state_ttl_{uuid.uuid4().hex[:8]}", "update", spark,
+        ttl_counters_stream(spark, src), "custom_state_ttl", "update", spark,
         state_partitions=harness.events_stream_partitions(sf_dir),
     )[0]
     return (

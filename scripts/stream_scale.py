@@ -1,37 +1,32 @@
 #!/usr/bin/env python
-"""Round-12 streaming STATE-scale rehearsal: the stateful streaming
-shapes over chunked replay with the RocksDB state store provider.
+"""Streaming STATE-scale rehearsal: the stateful streaming keys'
+dataflows over chunked replay with the RocksDB state store provider.
 
-The round-11 sf10 rehearsal was batch-only; this is the streaming axis
-— the reference's core competency (an unbounded channel drained into
-Hive). Five shapes, each the dataflow of a registered stream_* key,
-run over N ts-ordered micro-batches so the watermark actually ADVANCES
-between batches and state eviction is observable:
+Seven shapes, each built by the registered key's own builder, run over
+N ts-ordered micro-batches so the watermark actually ADVANCES between
+batches and state eviction is observable:
 
-  windowed_agg   stream_watermark's shape: watermark + 1h tumbling agg,
-                 append mode. State = open windows; eviction = windows
-                 the watermark passed.
-  dedup_wm       stream_dedup_wm's shape: dropDuplicatesWithinWatermark
-                 on event_id. State = ids within the watermark horizon;
-                 on a ts-ordered replay this is the shape whose state
-                 would be O(corpus) without eviction.
-  ss_join        stream_stream_join's shape: purchases⋈signups within
-                 2h, watermarks both sides. State = buffered rows both
-                 sides inside the horizon.
-  custom_state   stream_custom_state's shape: applyInPandasWithState
-                 per-user counters (NoTimeout — state is bounded by
-                 |users|, the documented contract; no eviction
-                 expected).
-  custom_state_ttl  stream_custom_state_ttl's shape (round 13): the
-                 same counters under EventTimeTimeout with a 45-min
-                 TTL and sentinel-closed replay — eviction > 0 and
-                 final state ≪ |users| is the whole point.
-  session_window stream_session_window's shape (round 13): native
-                 session_window agg — the most state-intensive shape
-                 (windows MERGE across batches, not just accumulate);
-                 closed sessions must evict behind the watermark.
-  agg_complete   stream_agg_update's shape: complete-mode groupBy
-                 event_type (state bounded by key cardinality).
+  windowed_agg   stream_watermark (queries.hourly_window_counts):
+                 watermark + 1h tumbling count, append mode. State =
+                 open windows; eviction = windows the watermark passed.
+  dedup_wm       stream_dedup_wm (queries.dedup_within_watermark),
+                 without the key's self-union. State = ids within the
+                 watermark horizon; O(corpus) without eviction.
+  ss_join        stream_stream_join (queries.purchase_signup_join):
+                 purchases⋈signups within 2h, watermarks both sides.
+  custom_state   stream_custom_state (queries.per_user_counts):
+                 applyInPandasWithState per-user counters, NoTimeout —
+                 state bounded by |users|, no eviction expected.
+  custom_state_ttl  stream_custom_state_ttl
+                 (state_ttl.ttl_counters_stream): the same counters
+                 under a 45-min event-time TTL, sentinel-closed replay —
+                 eviction > 0 and final state ≪ |users|.
+  session_window stream_session_window (session_window.session_windows):
+                 6h-gap sessions with the key's count and DECIMAL sum;
+                 windows MERGE across batches and closed sessions must
+                 evict behind the watermark.
+  agg_complete   stream_agg_update (queries.event_type_totals):
+                 complete-mode groupBy event_type.
 
 Per shape we record, from StreamingQueryProgress: per-batch input rows,
 batch duration, watermark, and the state operator's numRowsTotal /
@@ -55,10 +50,13 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 from flume_hive_batch_sink_spark.session import get_spark  # noqa: E402
-from flume_hive_batch_sink_spark.streaming import harness  # noqa: E402
+from flume_hive_batch_sink_spark.streaming import (  # noqa: E402
+    harness,
+    queries,
+    session_window,
+    state_ttl,
+)
 
 ROCKSDB = (
     "org.apache.spark.sql.execution.streaming.state."
@@ -137,109 +135,17 @@ def main() -> None:
             flush=True,
         )
 
-    # 1. windowed agg with watermark (stream_watermark shape)
-    s = harness.replay_chunks(spark, sf_dir, n_chunks=n_chunks)
-    run(
-        "windowed_agg",
-        s.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour"))
-        .agg(F.count("*").alias("n")),
-        "append",
-    )
+    def chunks(**kw):
+        return harness.replay_chunks(spark, sf_dir, n_chunks=n_chunks, **kw)
 
-    # 2. dedup within watermark (stream_dedup_wm shape) — the shape
-    # whose state is O(corpus) unless the watermark evicts
-    s = harness.replay_chunks(spark, sf_dir, n_chunks=n_chunks)
-    run(
-        "dedup_wm",
-        s.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(
-            ["event_id"]
-        ),
-        "append",
-    )
-
-    # 3. stream-stream time-range join (stream_stream_join shape)
-    p = (
-        harness.replay_chunks(spark, sf_dir, n_chunks=n_chunks)
-        .filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "1 hour")
-        .alias("p")
-    )
-    g = (
-        harness.replay_chunks(spark, sf_dir, n_chunks=n_chunks)
-        .filter(F.col("event_type") == "signup")
-        .withWatermark("ts", "1 hour")
-        .alias("s")
-    )
-    run(
-        "ss_join",
-        p.join(
-            g,
-            F.expr(
-                "p.user_id = s.user_id AND p.ts >= s.ts "
-                "AND p.ts <= s.ts + INTERVAL 2 HOUR"
-            ),
-        ).select(
-            F.col("p.event_id").alias("purchase_id"),
-            F.col("s.event_id").alias("signup_id"),
-        ),
-        "append",
-    )
-
-    # 4. custom state (stream_custom_state shape): per-user counters
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def update(key, pdfs, state: GroupState):
-        n = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            n += len(pdf)
-        state.update((n,))
-        yield pd.DataFrame({"user_id": [key[0]], "n_events": [n]})
-
-    s = harness.replay_chunks(spark, sf_dir, n_chunks=n_chunks)
-    run(
-        "custom_state",
-        s.groupBy("user_id").applyInPandasWithState(
-            update,
-            "user_id BIGINT, n_events BIGINT",
-            "n BIGINT",
-            "update",
-            GroupStateTimeout.NoTimeout,
-        ),
-        "update",
-    )
-
-    # 4b. custom state with event-time TTL (stream_custom_state_ttl
-    # shape): idle users evict; sentinels drain everything at the end
-    from flume_hive_batch_sink_spark.streaming import state_ttl
-
-    s = harness.replay_chunks_with_sentinels(
-        spark, sf_dir, n_chunks=n_chunks, sentinel_offsets_min=(120, 240)
-    )
-    run("custom_state_ttl", state_ttl.ttl_counters_stream(spark, s), "update")
-
-    # 4c. native session windows (stream_session_window shape): per-user
-    # 6h-gap sessions merge in state and close behind the watermark
-    s = harness.replay_chunks(spark, sf_dir, n_chunks=n_chunks)
-    run(
-        "session_window",
-        s.withWatermark("ts", "10 minutes")
-        .groupBy("user_id", F.session_window("ts", "6 hours").alias("w"))
-        .agg(F.count("*").alias("n")),
-        "append",
-    )
-
-    # 5. complete-mode aggregate (stream_agg_update shape)
-    s = harness.replay_chunks(spark, sf_dir, n_chunks=n_chunks)
-    run(
-        "agg_complete",
-        s.groupBy("event_type").agg(
-            F.count("*").alias("n"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        ),
-        "complete",
-    )
+    run("windowed_agg", queries.hourly_window_counts(chunks()), "append")
+    run("dedup_wm", queries.dedup_within_watermark(chunks()), "append")
+    run("ss_join", queries.purchase_signup_join(chunks(), chunks()), "append")
+    run("custom_state", queries.per_user_counts(chunks()), "update")
+    ttl_src = chunks(sentinel_offsets_min=state_ttl.SENTINELS_MIN)
+    run("custom_state_ttl", state_ttl.ttl_counters_stream(spark, ttl_src), "update")
+    run("session_window", session_window.session_windows(chunks()), "append")
+    run("agg_complete", queries.event_type_totals(chunks()), "complete")
 
     print(
         json.dumps(

@@ -10,6 +10,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from flume_hive_batch_sink_spark.io import load
+from flume_hive_batch_sink_spark.partitioning import scoped_conf
 from flume_hive_batch_sink_spark.streaming import harness, sink, source
 
 import pytest
@@ -19,6 +20,12 @@ import pytest
 pytestmark = pytest.mark.slow
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_T2", "/root/testdata/sf0.01")
+ROCKSDB = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider"
+    )
+}
 
 
 def test_watermark_drops_late_windows(spark):
@@ -145,36 +152,21 @@ def test_text_ingest_hive_crash_recovery(spark):
     sf_dir = "/root/testdata/sf0.001"
     ev = load(spark, sf_dir, "events")
     base = tempfile.mkdtemp(prefix="text_recovery_")
-    hold = os.path.join(base, "hold")
     src = os.path.join(base, "src")
     out = os.path.join(base, "tbl")
     chk = os.path.join(base, "chk")
     os.makedirs(src)
 
-    # stage all 4 TSV chunks executor-side (the operator's staging shape)
-    (
-        ev.select(
-            F.pmod("event_id", F.lit(4)).alias("chunk"),
-            F.col("event_id").cast("string").alias("c0"),
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("c1"),
-            F.col("user_id").cast("string").alias("c2"),
-            F.col("event_type").alias("c3"),
-            F.round("value", 4).cast("string").alias("c4"),
-        )
-        .repartition("chunk")
-        .write.option("sep", "\t")
-        .partitionBy("chunk")
-        .csv(hold)
-    )
-    import glob
+    # stage all 4 wire chunks executor-side through the engine's stager
     import shutil
     import time
 
-    chunk_files = []
-    for c in range(4):
-        (part,) = glob.glob(os.path.join(hold, f"chunk={c}", "part-*"))
-        chunk_files.append(os.path.join(base, f"chunk_{c:03d}.tsv"))
-        shutil.move(part, chunk_files[-1])
+    wire = source.encode_text_wire(ev, F.pmod("event_id", F.lit(4)))
+    hold, n_files = source.stage_in_order(
+        wire.repartition("chunk"), range(4), "csv", **source.TEXT_WIRE_OPTIONS
+    )
+    assert n_files == 4
+    chunk_files = sorted(os.path.join(hold, f) for f in os.listdir(hold))
 
     now = time.time()
 
@@ -183,18 +175,9 @@ def test_text_ingest_hive_crash_recovery(spark):
         shutil.copy(chunk_files[i], dst)
         os.utime(dst, (now + i, now + i))
 
-    schema = (
-        "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
-        "event_type STRING, value DOUBLE"
-    )
-
     def run_sink() -> None:
-        s = (
-            spark.readStream.schema(schema)
-            .option("sep", "\t")
-            .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .option("maxFilesPerTrigger", 1)
-            .csv(src)
+        s = source.read_text_wire(
+            spark.readStream.option("maxFilesPerTrigger", 1), src
         )
         q = (
             s.writeStream.foreachBatch(
@@ -211,12 +194,7 @@ def test_text_ingest_hive_crash_recovery(spark):
     run_sink()
 
     # crash mid-epoch 2: half the chunk's rows land, no checkpoint commit
-    chunk2 = (
-        spark.read.schema(schema)
-        .option("sep", "\t")
-        .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-        .csv(chunk_files[2])
-    )
+    chunk2 = source.read_text_wire(spark.read, chunk_files[2])
     partial = chunk2.limit(chunk2.count() // 2)
     sink.write_epoch(partial, 2, out)
 
@@ -394,20 +372,13 @@ def test_watermark_eviction_bounds_state_rocksdb(spark):
     watermark. Pins the property the sf10 rehearsal measures
     (scripts/stream_scale.py): without eviction, dedup state is
     O(corpus) and the 100 TB posture collapses."""
-    provider = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, provider)
-    try:
+    from flume_hive_batch_sink_spark.streaming import queries
+
+    with scoped_conf(spark, ROCKSDB):
         s = harness.replay_chunks(spark, SF_DIR, n_chunks=4)
-        deduped = s.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(
-            ["event_id"]
-        )
         _, progress = harness.run_with_progress(
-            deduped, "evict_gate_dedup", "append", spark, fmt="noop"
+            queries.dedup_within_watermark(s), "evict_gate_dedup", "append",
+            spark, fmt="noop",
         )
         ops = [p["stateOperators"][0] for p in progress if p.get("stateOperators")]
         n_in = sum(p.get("numInputRows") or 0 for p in progress)
@@ -419,13 +390,9 @@ def test_watermark_eviction_bounds_state_rocksdb(spark):
         )
 
         s = harness.replay_chunks(spark, SF_DIR, n_chunks=4)
-        agg = (
-            s.withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "1 hour"))
-            .agg(F.count("*").alias("n"))
-        )
         _, progress = harness.run_with_progress(
-            agg, "evict_gate_window", "append", spark, fmt="noop"
+            queries.hourly_window_counts(s), "evict_gate_window", "append",
+            spark, fmt="noop",
         )
         ops = [p["stateOperators"][0] for p in progress if p.get("stateOperators")]
         removed = sum(op.get("numRowsRemoved") or 0 for op in ops)
@@ -433,11 +400,6 @@ def test_watermark_eviction_bounds_state_rocksdb(spark):
         assert removed > 0, "no closed windows evicted from agg state"
         # open state = windows within the 10-min horizon of max ts (~1)
         assert final_rows <= 4, f"window state not closing: {final_rows} open"
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def test_ttl_update_clamps_timeout_above_watermark():
@@ -491,15 +453,8 @@ def test_custom_state_ttl_evicts_and_conserves_counts(spark):
     loses nothing and double-counts nothing."""
     from flume_hive_batch_sink_spark.streaming import state_ttl
 
-    provider = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, provider)
-    try:
-        src = harness.replay_chunks_with_sentinels(
+    with scoped_conf(spark, ROCKSDB):
+        src = harness.replay_chunks(
             spark, SF_DIR, n_chunks=4, sentinel_offsets_min=(120, 240)
         )
         out = state_ttl.ttl_counters_stream(spark, src)
@@ -540,11 +495,6 @@ def test_custom_state_ttl_evicts_and_conserves_counts(spark):
             .count()
         )
         assert mismatch == 0, f"{mismatch} users with lost/dup counts"
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def test_custom_state_ttl_late_chunk_replay_end_to_end(spark):
@@ -570,7 +520,7 @@ def test_custom_state_ttl_late_chunk_replay_end_to_end(spark):
 
     from flume_hive_batch_sink_spark.streaming import state_ttl
 
-    src = harness.replay_chunks_with_sentinels(
+    src = harness.replay_chunks(
         spark,
         SF_DIR,
         n_chunks=4,
