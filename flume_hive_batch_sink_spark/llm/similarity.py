@@ -1,11 +1,10 @@
 """2.I — Similarity search over embedding columns.
 
-Cosine math stays JVM-side as codegen'd array expressions
-(`zip_with` + `aggregate` over DOUBLE), never a Python UDF. Exact
-pairwise (`cosine_pairs`) is the correctness baseline and the verify
-tier; random-hyperplane LSH (`llm_ann_lsh`) is the 100 TB candidate
-path: per-vector signatures are linear, and only bucket-mates meet the
-exact kernel.
+Exact pairwise cosine runs as blocked GEMM (`blocked_*`: one BLAS
+matmul per block pair), the correctness baseline and the verify tier;
+random-hyperplane LSH (`llm_ann_lsh`) and the IVF / SemDeDup / PQ
+family are the 100 TB candidate paths: per-vector signatures or
+codes are linear, and only candidates meet the exact kernel.
 """
 
 from __future__ import annotations
@@ -36,32 +35,6 @@ def dot(a: F.Column, b: F.Column) -> F.Column:
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0),
         lambda acc, x: acc + x,
-    )
-
-
-def cosine_pairs(
-    left: DataFrame, right: DataFrame, upper_triangle: bool = False
-) -> DataFrame:
-    """All-pairs cosine similarity as (vec_a, vec_b, cos_raw).
-
-    Norms are precomputed per side (linear) so the pairwise kernel is a
-    single dot product. upper_triangle keeps vec_a < vec_b.
-    """
-    a = left.select(
-        F.col("vec_id").alias("vec_a"),
-        _as_double("embedding").alias("ea"),
-    ).withColumn("na", F.sqrt(dot(F.col("ea"), F.col("ea"))))
-    b = right.select(
-        F.col("vec_id").alias("vec_b"),
-        _as_double("embedding").alias("eb"),
-    ).withColumn("nb", F.sqrt(dot(F.col("eb"), F.col("eb"))))
-    cond = F.col("vec_a") < F.col("vec_b") if upper_triangle else (
-        F.col("vec_a") != F.col("vec_b")
-    )
-    return (
-        a.join(b, cond)
-        .withColumn("cos_raw", dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")))
-        .select("vec_a", "vec_b", "cos_raw")
     )
 
 
@@ -686,20 +659,21 @@ def _train_sample_mod(n: int) -> int:
 
 def _centroid_probes(vec_df: DataFrame, cent_mat, nprobe: int) -> DataFrame:
     """Assign every vector its ``nprobe`` nearest centroids by cosine:
-    (vec_id, cid, probes) with cid the top-1 and probes the ranked
-    nprobe list (ints indexing ``cent_mat`` rows).
+    ``vec_df``'s columns plus cid (the top-1) and probes (the ranked
+    nprobe list), both ints indexing ``cent_mat`` rows — the one
+    assigner every IVF / SemDeDup key uses.
 
     ``cent_mat`` is a row-normalized numpy (k, dim) matrix; vectors in
-    ``vec_df`` ("vec_id", "e") are normalized in-kernel. Dispatch on
+    ``vec_df`` ("vec_id", "e", …) are normalized in-kernel. Dispatch on
     the closure budget: k·dim ≤ _ASSIGN_CLOSURE_DOUBLES ships the
     matrix in the Arrow kernel's closure (map-only, no shuffle);
     larger quantizers route through _centroid_probes_join so neither
     the task payload nor any single partition ever holds the full
     centroid set. Ties break toward the lower cid on BOTH paths
-    (stable argsort / window ORDER BY sim DESC, cid).
+    (argmax / stable argsort / window ORDER BY sim DESC, cid).
     """
     import numpy as np
-    import pandas as pd
+    from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
     k, dim = cent_mat.shape
     p = min(nprobe, k)
@@ -708,7 +682,8 @@ def _centroid_probes(vec_df: DataFrame, cent_mat, nprobe: int) -> DataFrame:
             [(int(i), [float(x) for x in row]) for i, row in enumerate(cent_mat)],
             "cid INT, ce ARRAY<DOUBLE>",
         )
-        return _centroid_probes_join(vec_df, cent_df, p)
+        probes = _centroid_probes_join(vec_df.select("vec_id", "e"), cent_df, p)
+        return vec_df.join(probes, "vec_id")
 
     def assign(batches, c_mat=cent_mat, pp=p):
         for pdf in batches:
@@ -717,17 +692,19 @@ def _centroid_probes(vec_df: DataFrame, cent_mat, nprobe: int) -> DataFrame:
             sims = mat @ c_mat.T
             cid = np.argmax(sims, axis=1)
             probes = np.argsort(-sims, axis=1, kind="stable")[:, :pp]
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "cid": cid.astype(np.int32),
-                    "probes": [r.astype(np.int32).tolist() for r in probes],
-                }
+            yield pdf.assign(
+                cid=cid.astype(np.int32),
+                probes=[r.astype(np.int32).tolist() for r in probes],
             )
 
-    return vec_df.select("vec_id", "e").mapInPandas(
-        assign, "vec_id BIGINT, cid INT, probes ARRAY<INT>"
+    out = StructType(
+        vec_df.schema.fields  # + builds a new list; .add would append to this one
+        + [
+            StructField("cid", IntegerType()),
+            StructField("probes", ArrayType(IntegerType())),
+        ]
     )
+    return vec_df.mapInPandas(assign, out)
 
 
 # Multiprobe search blocking (round-14). The r14 emb500k probe killed
@@ -806,26 +783,6 @@ def _multiprobe_blocks(assigned: DataFrame, n_vec: int) -> DataFrame:
         F.lit(None).cast("array<int>").alias("probes_blk"),
     )
     return q_side.unionByName(d_side)
-
-
-def _parse_probe_group(pdf):
-    """Split one (cblk, qblk) group into numpy query/database sides and
-    the probe mask ingredients. Returns None when either side is empty.
-    ``d_local`` / local probe ids are cid % _PROBE_CBLK — unique within
-    a centroid block by construction."""
-    import numpy as np
-
-    db = pdf[pdf["role"] == 0]
-    qs = pdf[pdf["role"] == 1]
-    if db.empty or qs.empty:
-        return None
-    dmat = np.array(db["e"].tolist(), dtype=np.float64)
-    dids = db["vec_id"].to_numpy()
-    d_local = (db["cid"].to_numpy().astype(np.int64)) % _PROBE_CBLK
-    qmat = np.array(qs["e"].tolist(), dtype=np.float64)
-    qids = qs["vec_id"].to_numpy()
-    probes = qs["probes_blk"].tolist()
-    return qids, qmat, probes, dids, dmat, d_local
 
 
 def _probe_mask(probes, lo, hi):
@@ -969,10 +926,9 @@ def _kmeans_centroids(
     dim = cent.shape[1]
 
     for _ in range(iters):
-        probes = _centroid_probes(train, cent, 1).select("vec_id", "cid")
-        assigned = train.join(probes, "vec_id")
         means = (
-            assigned.select("cid", F.posexplode("e").alias("j", "x"))
+            _centroid_probes(train, cent, 1)
+            .select("cid", F.posexplode("e").alias("j", "x"))
             .groupBy("cid", "j")
             .agg(F.avg("x").alias("m"))
             .collect()
@@ -987,6 +943,72 @@ def _kmeans_centroids(
                 new_cent[cid] = v / n
         cent = new_cent
     return cent
+
+
+def _multiprobe_search(
+    emb: DataFrame, n_vec: int, reduce_tile, schema: str
+) -> DataFrame:
+    """The trained-quantizer multiprobe search of the IVF and
+    SemDeDup-kmeans keys: train k = _quantizer_k(n) centroids
+    (_kmeans_centroids), assign every vector its nprobe = ⌈0.8·k⌉
+    nearest lists (_centroid_probes), and run one GEMM per
+    (centroid-block, query-block) group of the blocked multiprobe
+    relation, in _PROBE_QTILE-row query tiles. Per tile,
+    ``reduce_tile(sims, allowed, qids, dids)`` reduces the (tile ×
+    |d-group|) cosine matrix, its probe mask and the tile's query /
+    database ids to a dict of equal-length output columns; ``schema``
+    is their Spark DDL.
+
+    Query role probes its nprobe nearest lists; database role is
+    indexed once under its single nearest centroid. The search runs
+    over the BLOCKED multiprobe relation (_multiprobe_blocks): the
+    pre-round-14 per-cid grouping exploded one q row PER PROBED LIST,
+    each dragging the 64-double vector — nprobe·n·dim ≈ 150 GB of
+    incompressible shuffle at 500k vectors (ENOSPC'd the emb500k
+    probe). Blocking ships each vector O(k/_PROBE_CBLK + n/_PROBE_QBLK)
+    times instead, and the in-task GEMM masks non-probed (q, d) pairs,
+    so the pair coverage is bit-identical."""
+    import math
+
+    import numpy as np
+    import pandas as pd
+
+    k = _quantizer_k(n_vec)
+    nprobe = max(1, math.ceil(0.8 * k))
+    cent = _kmeans_centroids(emb, k, n_vec=n_vec)
+
+    e_df = emb.select("vec_id", _as_double("embedding").alias("e"))
+    assigned = _centroid_probes(e_df, cent, nprobe).withColumn(
+        "e",
+        F.transform("e", lambda x: x / F.sqrt(dot(F.col("e"), F.col("e")))),
+    )
+    both = _multiprobe_blocks(assigned, n_vec)
+
+    # single-arg signature on purpose: applyInPandas dispatches a
+    # (key, pdf) call form when the callable takes two parameters
+    def block_search(pdf):
+        db = pdf[pdf["role"] == 0]
+        qs = pdf[pdf["role"] == 1]
+        if db.empty or qs.empty:
+            return pd.DataFrame()
+        dmat = np.array(db["e"].tolist(), dtype=np.float64)
+        dids = db["vec_id"].to_numpy()
+        # cid % _PROBE_CBLK: unique within a centroid block by construction
+        d_local = db["cid"].to_numpy().astype(np.int64) % _PROBE_CBLK
+        qmat = np.array(qs["e"].tolist(), dtype=np.float64)
+        qids = qs["vec_id"].to_numpy()
+        probes = qs["probes_blk"].tolist()
+        tiles = []
+        for lo in range(0, len(qids), _PROBE_QTILE):
+            hi = min(lo + _PROBE_QTILE, len(qids))
+            sims = qmat[lo:hi] @ dmat.T
+            allowed = _probe_mask(probes, lo, hi)[:, d_local]
+            tiles.append(reduce_tile(sims, allowed, qids[lo:hi], dids))
+        return pd.DataFrame(
+            {c: np.concatenate([t[c] for t in tiles]) for c in tiles[0]}
+        )
+
+    return both.groupBy("cblk", "qblk").applyInPandas(block_search, schema)
 
 
 @query(
@@ -1024,63 +1046,18 @@ def llm_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction) nprobe ≪ k achieves the same recall — the dataflow
     below is identical, only the constant changes; the certificate
     makes the trade measurable instead of assumed."""
-    import math
-
     import numpy as np
-    import pandas as pd
+
+    def best_cos(sims, allowed, qids, dids):
+        sims[~allowed] = -np.inf
+        sims[qids[:, None] == dids[None, :]] = -np.inf  # self
+        best = sims.max(axis=1)
+        keep = best > -np.inf
+        return {"vec_id": qids[keep], "cos_ivf": best[keep]}
 
     emb = load(spark, sf_dir, "embeddings")
-    n_vec = emb.count()
-    k = _quantizer_k(n_vec)
-    nprobe = max(1, math.ceil(0.8 * k))
-    cent = _kmeans_centroids(emb, k, n_vec=n_vec)
-
-    e_df = emb.select("vec_id", _as_double("embedding").alias("e"))
-    e_norm = e_df.select(
-        "vec_id",
-        F.transform(
-            "e", lambda x: x / F.sqrt(dot(F.col("e"), F.col("e")))
-        ).alias("e"),
-    )
-    assigned = e_norm.join(_centroid_probes(e_df, cent, nprobe), "vec_id")
-    # Query role probes its nprobe nearest lists; database role is
-    # indexed once under its single nearest centroid. The search runs
-    # over the BLOCKED multiprobe relation (_multiprobe_blocks): the
-    # pre-round-14 per-cid grouping exploded one q row PER PROBED LIST,
-    # each dragging the 64-double vector — nprobe·n·dim ≈ 150 GB of
-    # incompressible shuffle at 500k vectors (ENOSPC'd the emb500k
-    # probe). Blocking ships each vector O(k/_PROBE_CBLK + n/_PROBE_QBLK)
-    # times instead, and the in-task GEMM masks non-probed (q, d)
-    # pairs, so the pair coverage — hence the certificate — is
-    # bit-identical.
-    both = _multiprobe_blocks(assigned, n_vec)
-
-    def block_search(pdf):
-        parsed = _parse_probe_group(pdf)
-        if parsed is None:
-            return pd.DataFrame(
-                {"vec_id": pd.Series(dtype="int64"),
-                 "cos_ivf": pd.Series(dtype="float64")}
-            )
-        qids, qmat, probes, dids, dmat, d_local = parsed
-        out_ids, out_cos = [], []
-        for lo in range(0, len(qids), _PROBE_QTILE):
-            hi = min(lo + _PROBE_QTILE, len(qids))
-            sims = qmat[lo:hi] @ dmat.T
-            allowed = _probe_mask(probes, lo, hi)[:, d_local]
-            sims[~allowed] = -np.inf
-            sims[qids[lo:hi, None] == dids[None, :]] = -np.inf  # self
-            best = sims.max(axis=1)
-            keep = best > -np.inf
-            out_ids.append(qids[lo:hi][keep])
-            out_cos.append(best[keep])
-        return pd.DataFrame(
-            {"vec_id": np.concatenate(out_ids),
-             "cos_ivf": np.concatenate(out_cos)}
-        )
-
-    per_list = both.groupBy("cblk", "qblk").applyInPandas(
-        block_search, "vec_id BIGINT, cos_ivf DOUBLE"
+    per_list = _multiprobe_search(
+        emb, emb.count(), best_cos, "vec_id BIGINT, cos_ivf DOUBLE"
     )
     ivf_top1 = per_list.groupBy("vec_id").agg(F.max("cos_ivf").alias("cos_ivf"))
 
@@ -1149,10 +1126,11 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Spark shape: centroids are the deterministic stride subset
     (oracle-reproducible, like llm_ann_ivf; swap in _kmeans_centroids
-    for trained ones — identical dataflow), assignment is a map-only
-    Arrow kernel with the centroid matrix in the closure, and the
-    in-cluster search is one applyInPandas GEMM per cluster — nothing
-    quadratic in n crosses the wire, only (vec_id, keep) comes back.
+    for trained ones — identical dataflow), assignment is
+    _centroid_probes (a map-only Arrow kernel with the centroid matrix
+    in the closure, under the closure budget), and the in-cluster
+    search is one applyInPandas GEMM per cluster — nothing quadratic
+    in n crosses the wire, only (vec_id, keep) comes back.
     Keep rule: drop b iff some cluster-mate a<b has cos(a,b) ≥ 0.95 —
     deterministic, join-free to express, and exactly replayed by the
     oracle's in-cluster pair join."""
@@ -1166,27 +1144,16 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent_pdf = (
         emb.filter(F.col("vec_id") % stride == 0)
         .orderBy("vec_id")
-        .select("vec_id", _as_double("embedding").alias("e"))
+        .select(_as_double("embedding").alias("e"))
         .toPandas()
     )
-    cent_ids = cent_pdf["vec_id"].to_numpy()
     cent = np.array(cent_pdf["e"].tolist(), dtype=np.float64)
-    cent_n = np.linalg.norm(cent, axis=1, keepdims=True)
-
-    def assign(batches, c_mat=cent, c_n=cent_n, c_ids=cent_ids):
-        for pdf in batches:
-            mat = np.array(pdf["e"].tolist(), dtype=np.float64)
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            sims = (mat / norms) @ (c_mat / c_n).T
-            # argmax with cid tiebreak == oracle's ORDER BY cos DESC, cid
-            best = np.argmax(sims, axis=1)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "cid": c_ids[best], "e": pdf["e"]}
-            )
-
-    assigned = emb.select("vec_id", _as_double("embedding").alias("e")).mapInPandas(
-        assign, "vec_id BIGINT, cid BIGINT, e ARRAY<DOUBLE>"
-    )
+    cent /= np.linalg.norm(cent, axis=1, keepdims=True)
+    # cid indexes the vec_id-ordered centroid rows, so argmax's
+    # lowest-index tiebreak == oracle's ORDER BY cos DESC, cid
+    assigned = _centroid_probes(
+        emb.select("vec_id", _as_double("embedding").alias("e")), cent, 1
+    ).drop("probes")
 
     def in_cluster_dedup(pdf):
         pdf = pdf.sort_values("vec_id", ignore_index=True)
@@ -1218,59 +1185,45 @@ _SEMDEDUP_KMEANS_T = 0.4
 
 def _kmeans_multiprobe_flagged(emb: DataFrame, n_vec: int) -> DataFrame:
     """The SemDeDup-kmeans OPERATOR side, shared by the full-certificate
-    key and its sampled sibling: train the coarse quantizer, assign +
-    multiprobe, and flag every vec with a lower-id in-probe neighbor at
-    cos ≥ _SEMDEDUP_KMEANS_T. Returns (vec_id, f=1) rows."""
-    import math
+    key and its sampled sibling: the trained multiprobe search
+    (_multiprobe_search) flagging every vec with a lower-id in-probe
+    neighbor at cos ≥ _SEMDEDUP_KMEANS_T. Returns (vec_id, f=1) rows."""
 
-    import numpy as np
-    import pandas as pd
-
-    k = _quantizer_k(n_vec)
-    nprobe = max(1, math.ceil(0.8 * k))
-    cent = _kmeans_centroids(emb, k, n_vec=n_vec)
-
-    e_df = emb.select("vec_id", _as_double("embedding").alias("e"))
-    e_norm = e_df.select(
-        "vec_id",
-        F.transform(
-            "e", lambda x: x / F.sqrt(dot(F.col("e"), F.col("e")))
-        ).alias("e"),
-    )
-    assigned = e_norm.join(_centroid_probes(e_df, cent, nprobe), "vec_id")
-    # Blocked multiprobe relation (round-14, see _multiprobe_blocks):
-    # the per-cid probe explode shipped nprobe·n vector payloads and
-    # ENOSPC'd the 500k-vector probe; blocking makes the shuffle
-    # O(n·(k/_PROBE_CBLK + n/qblk)) rows with the same exact
-    # pair coverage via the in-task probe mask.
-    both = _multiprobe_blocks(assigned, n_vec)
-
-    # single-arg signature on purpose: applyInPandas dispatches a
-    # (key, pdf) call form when the callable takes two parameters
-    def block_dups(pdf):
-        t = _SEMDEDUP_KMEANS_T
-        parsed = _parse_probe_group(pdf)
-        if parsed is None:
-            return pd.DataFrame({"vec_id": pd.Series(dtype="int64")})
-        qids, qmat, probes, dids, dmat, d_local = parsed
-        out = []
-        for lo in range(0, len(qids), _PROBE_QTILE):
-            hi = min(lo + _PROBE_QTILE, len(qids))
-            sims = qmat[lo:hi] @ dmat.T
-            allowed = _probe_mask(probes, lo, hi)[:, d_local]
-            # drop q iff some LOWER-id database vector in a probed list
-            # is within the semantic-dup radius (the SemDeDup keep rule)
-            hit = (
-                (sims >= t) & allowed & (dids[None, :] < qids[lo:hi, None])
-            ).any(axis=1)
-            out.append(qids[lo:hi][hit])
-        return pd.DataFrame({"vec_id": np.concatenate(out)})
+    def lower_id_dup(sims, allowed, qids, dids):
+        # drop q iff some LOWER-id database vector in a probed list is
+        # within the semantic-dup radius (the SemDeDup keep rule)
+        hit = (
+            (sims >= _SEMDEDUP_KMEANS_T)
+            & allowed
+            & (dids[None, :] < qids[:, None])
+        ).any(axis=1)
+        return {"vec_id": qids[hit]}
 
     return (
-        both.groupBy("cblk", "qblk")
-        .applyInPandas(block_dups, "vec_id BIGINT")
+        _multiprobe_search(emb, n_vec, lower_id_dup, "vec_id BIGINT")
         .distinct()
         .withColumn("f", F.lit(1))
+    )
+
+
+def _dup_certificate(truth: DataFrame, flagged: DataFrame, *counts) -> DataFrame:
+    """The SemDeDup-kmeans certificate row: ``counts`` columns, then
+    n_true_dups, precision_ok (no flagged vec outside the truth set)
+    and recall_ok (≥ 90% of the truth set flagged), from the full
+    outer join of ``truth`` (vec_id, t=1) and ``flagged`` (vec_id, f=1)."""
+    merged = truth.join(flagged, "vec_id", "full")
+    n_true = F.coalesce(F.sum("t"), F.lit(0))
+    n_hit = F.coalesce(
+        F.sum(F.when((F.col("t") == 1) & (F.col("f") == 1), 1)), F.lit(0)
+    )
+    n_false = F.coalesce(
+        F.sum(F.when(F.col("t").isNull() & (F.col("f") == 1), 1)), F.lit(0)
+    )
+    return merged.agg(
+        *counts,
+        n_true.cast("long").alias("n_true_dups"),
+        (n_false == 0).alias("precision_ok"),
+        (n_hit >= 0.9 * n_true).alias("recall_ok"),
     )
 
 
@@ -1318,19 +1271,8 @@ def llm_semdedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("t", F.lit(1))
     )
-    merged = true_dups.join(flagged, "vec_id", "full")
-    n_true = F.coalesce(F.sum("t"), F.lit(0))
-    n_hit = F.coalesce(
-        F.sum(F.when((F.col("t") == 1) & (F.col("f") == 1), 1)), F.lit(0)
-    )
-    n_false = F.coalesce(
-        F.sum(F.when(F.col("t").isNull() & (F.col("f") == 1), 1)), F.lit(0)
-    )
-    return merged.agg(
-        F.lit(n_vec).cast("long").alias("n_vecs"),
-        n_true.cast("long").alias("n_true_dups"),
-        (n_false == 0).alias("precision_ok"),
-        (n_hit >= 0.9 * n_true).alias("recall_ok"),
+    return _dup_certificate(
+        true_dups, flagged, F.lit(n_vec).cast("long").alias("n_vecs")
     )
 
 
@@ -1464,20 +1406,11 @@ def llm_semdedup_kmeans_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_flagged = flagged.filter(_sem_q_pred(n_vec))
     truth = _sampled_truth_hits(emb, n_vec, _SEMDEDUP_KMEANS_T)
     n_sampled = emb.filter(_sem_q_pred(n_vec)).count()
-    merged = truth.join(q_flagged, "vec_id", "full")
-    n_true = F.coalesce(F.sum("t"), F.lit(0))
-    n_hit = F.coalesce(
-        F.sum(F.when((F.col("t") == 1) & (F.col("f") == 1), 1)), F.lit(0)
-    )
-    n_false = F.coalesce(
-        F.sum(F.when(F.col("t").isNull() & (F.col("f") == 1), 1)), F.lit(0)
-    )
-    return merged.agg(
+    return _dup_certificate(
+        truth,
+        q_flagged,
         F.lit(n_vec).cast("long").alias("n_vecs"),
         F.lit(n_sampled).cast("long").alias("n_sampled"),
-        n_true.cast("long").alias("n_true_dups"),
-        (n_false == 0).alias("precision_ok"),
-        (n_hit >= 0.9 * n_true).alias("recall_ok"),
     )
 
 
@@ -1497,6 +1430,37 @@ _PQ_QUERY_MOD = 97   # query-set spread: vec_id = 0 (mod 97) …
 # binds only above n≈25k (sf1 has 206 queries), so results at every
 # attested scale are unchanged, and cost above that is 256·n — linear.
 _PQ_QUERY_LIMIT = 256
+
+
+def _capped_query_set(df: DataFrame, mod: int, limit: int) -> DataFrame:
+    """The fixed-SIZE query set of the PQ certificate and hard-negative
+    mining: rows with vec_id ≡ 0 (mod ``mod``), the ``limit`` smallest
+    by vec_id — the oracles' ``WHERE vec_id % mod = 0 ORDER BY vec_id
+    LIMIT limit``."""
+    return df.filter(F.col("vec_id") % mod == 0).orderBy("vec_id").limit(limit)
+
+
+def _exact_int_scores(mat, q_mat):
+    """The exact inner-product score of every (row, query) pair:
+    Σ floor(x·y·1e9 + 0.5) over the dims, summed in int64 — an
+    (len(mat), len(q_mat)) matrix. Every operation is a single
+    correctly-rounded IEEE double op (multiply, multiply, add, floor)
+    with no decimal anywhere, so numpy computes the bit-exact integers
+    DuckDB's ``CAST(floor(x[1] * x[2] * 1000000000 + 0.5) AS BIGINT)``
+    does (the PQ and hard-negative oracles), and the sum is order-free
+    because integer addition commutes. 256-row tiles bound the
+    (tile × |q| × dim) broadcast product to ~34 MB at 256 queries."""
+    import numpy as np
+
+    scores = np.empty((len(mat), len(q_mat)), dtype=np.int64)
+    for lo in range(0, len(mat), 256):
+        t = mat[lo:lo + 256, None, :] * q_mat[None, :, :]
+        t *= 1e9
+        t += 0.5
+        np.floor(t, out=t)
+        scores[lo:lo + 256] = t.sum(axis=2, dtype=np.int64)
+    return scores
+
 
 # Decimal-exact kernels: every per-dim float op is a SINGLE IEEE double
 # op (identical in both engines), immediately rounded to 9 decimals and
@@ -1518,47 +1482,6 @@ _DEC_DOT = (
     "CAST(round(x * y, 9) AS DECIMAL(20,9))), "
     "CAST(0 AS DECIMAL(28,9)), (acc, z) -> CAST(acc + z AS DECIMAL(28,9)))"
 )
-
-# Scaled-int64 twins (round-15, VERDICT r14 item 7). Every term the
-# decimal kernels sum is an exact multiple of 1e-9 (round(…, 9) then
-# exact DECIMAL cast), so the whole sum is exactly representable as the
-# INTEGER count of 1e-9 units: term × 1e9 in DECIMAL arithmetic (exact)
-# cast to BIGINT, accumulated with plain long adds. Order-free like the
-# decimal path (integer addition commutes), identical ranking (x ↦
-# x·1e9 is monotone), and the final score is recovered as scaled_long /
-# 1e9 — correctly-rounded double because every |scaled sum| here is
-# ≪ 2^53 (embeddings are O(1)-magnitude; a 64-term dot stays < 1e12
-# units; the profile probe measured |max| ~1e11). The point: Spark
-# decimal arithmetic is java.math.BigDecimal — one object allocation
-# per add — and the PQ dataflow runs these kernels |corpus|·|q| times;
-# the int64 twins keep the whole-stage-codegen loop allocation-free.
-# Magnitude guard: a term would overflow the scaled long only past
-# |x·y| ≈ 9.2e9, at which point DECIMAL(20,9) is near its own cap and
-# the operator contract (embedding-scaled data) is already broken.
-_LONG_SQDIST = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> "
-    "CAST(CAST(round((x - y) * (x - y), 9) AS DECIMAL(20,9)) "
-    "* 1000000000 AS BIGINT)), "
-    "CAST(0 AS BIGINT), (acc, z) -> acc + z)"
-)
-_LONG_DOT = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> "
-    "CAST(CAST(round(x * y, 9) AS DECIMAL(20,9)) "
-    "* 1000000000 AS BIGINT)), "
-    "CAST(0 AS BIGINT), (acc, z) -> acc + z)"
-)
-
-# Default: the DECIMAL reference kernels. After the round-15 numpy
-# rewrites of the exact-truth tier and the ADC scan, no hot loop runs
-# these expressions over |corpus|·|q| rows anymore — only the
-# |corpus|·m·k encode and |q|·m·k LUT stages — and there the decimal
-# form measures FASTER (2.5 s vs 6.3 s encode at 500k: the int64 twin
-# adds a decimal multiply + long cast per term for a win that only
-# existed at exact-tier scale). The int64 twins stay A/B-pinned
-# bit-identical (tests/test_quantizer.py::TestPQInt64Kernels) as the
-# documented evidence that the decimal values ARE exact 1e-9-unit
-# integers — the invariant the numpy stages rely on.
-_PQ_INT64_KERNELS = False
 
 _PQ_ORACLE = f"""
     WITH e AS (
@@ -1655,6 +1578,38 @@ def _pq_sub_explode(df, vec_col, out_col):
     )
 
 
+def _top10_per_query(q_ids, ids, score_of, cols):
+    """One Arrow batch's local top-10 per query under the global
+    (score DESC, id) order, self excluded, as a (qid, id, score) frame
+    with column names ``cols``; ``score_of(j)`` is query j's int64
+    score per batch row. A global winner is necessarily a batch-local
+    winner, so a window over the ≤ 10·#batches rows per query merges
+    the batches exactly."""
+    import numpy as np
+    import pandas as pd
+
+    out = ([], [], [])
+    for j in range(len(q_ids)):
+        sel = ids != q_ids[j]
+        sids, sc = ids[sel], score_of(j)[sel]
+        top = np.lexsort((sids, -sc))[:10]
+        out[0].append(np.full(len(top), q_ids[j], dtype=np.int64))
+        out[1].append(sids[top])
+        out[2].append(sc[top])
+    return pd.DataFrame({c: np.concatenate(v) for c, v in zip(cols, out)})
+
+
+def _pq_anchor_codebook(e: DataFrame) -> DataFrame:
+    """The untrained (s, cid, cs) codebook: the subvectors of the _PQ_K
+    smallest vec_ids ≡ 3 (mod _PQ_ANCHOR_MOD) — the oracle's anch CTE."""
+    anch = e.filter(F.col("vec_id") % _PQ_ANCHOR_MOD == 3).orderBy(
+        "vec_id"
+    ).limit(_PQ_K)
+    return _pq_sub_explode(
+        anch.select(F.col("vec_id").alias("cid"), "e"), F.col("e"), "cs"
+    )
+
+
 def _pq_exact_top10(e: DataFrame) -> DataFrame:
     """The exact inner-product top-10 per query — the certificate's
     ground truth. Depends only on the corpus, not on any codebook, so
@@ -1665,54 +1620,23 @@ def _pq_exact_top10(e: DataFrame) -> DataFrame:
     ADC" was never the ADC. The old shape evaluated the per-pair dot as
     a zip_with/aggregate expression whose per-term ROUND(x·y, 9) +
     DECIMAL cast each allocate a java.math.BigDecimal: 128M pairs × 64
-    terms × ~3 allocations. Now the score is defined as
-    Σ floor(x·y·1e9 + 0.5) summed in int64 — every operation is a
-    single correctly-rounded IEEE double op (multiply, multiply, add,
-    floor) with no decimal anywhere, so numpy computes the bit-exact
-    same integers DuckDB's floor() does, order-free because integer
-    addition commutes. Each Arrow batch emits only its per-query local
-    top-10 under the global (score DESC, vec_id) order (a global
-    winner is necessarily a batch-local winner), and a tiny window
-    merges the ≤ 10·#batches rows per query. Tiles bound the
-    (tile × |q| × dim) broadcast product to ~34 MB per task."""
+    terms × ~3 allocations. Now the score is _exact_int_scores, in
+    numpy, and each Arrow batch emits only its per-query local top-10
+    (_top10_per_query) for a tiny window to merge."""
     import numpy as np
-    import pandas as pd
 
-    q_pdf = (
-        e.filter(F.col("vec_id") % _PQ_QUERY_MOD == 0)
-        .orderBy("vec_id")
-        .limit(_PQ_QUERY_LIMIT)
-        .toPandas()
-    )
+    q_pdf = _capped_query_set(e, _PQ_QUERY_MOD, _PQ_QUERY_LIMIT).toPandas()
     q_ids = q_pdf["vec_id"].to_numpy()
     q_mat = np.array(q_pdf["e"].tolist(), dtype=np.float64)
 
     def scan(batches, q_ids=q_ids, q_mat=q_mat):
         for pdf in batches:
             ids = pdf["vec_id"].to_numpy()
-            mat = np.array(pdf["e"].tolist(), dtype=np.float64)
-            scores = np.empty((len(ids), len(q_ids)), dtype=np.int64)
-            for lo in range(0, len(ids), 256):
-                hi = min(lo + 256, len(ids))
-                t = mat[lo:hi, None, :] * q_mat[None, :, :]
-                t *= 1e9
-                t += 0.5
-                np.floor(t, out=t)
-                scores[lo:hi] = t.sum(axis=2, dtype=np.int64)
-            out_q, out_v, out_s = [], [], []
-            for j in range(len(q_ids)):
-                sel = ids != q_ids[j]
-                sids, sc = ids[sel], scores[sel, j]
-                top = np.lexsort((sids, -sc))[:10]
-                out_q.append(np.full(len(top), q_ids[j], dtype=np.int64))
-                out_v.append(sids[top])
-                out_s.append(sc[top])
-            yield pd.DataFrame(
-                {
-                    "qid": np.concatenate(out_q),
-                    "vec_id": np.concatenate(out_v),
-                    "score": np.concatenate(out_s),
-                }
+            scores = _exact_int_scores(
+                np.array(pdf["e"].tolist(), dtype=np.float64), q_mat
+            )
+            yield _top10_per_query(
+                q_ids, ids, lambda j: scores[:, j], ("qid", "vec_id", "score")
             )
 
     # spread the corpus first: the fixture parquet arrives in 1-2 scan
@@ -1759,11 +1683,9 @@ def _pq_search(
     # skips it once the scan has a split per core; the codes side is an
     # aggregate's output and always round-robins.
     par = e.sparkSession.sparkContext.defaultParallelism
-    sqd_kernel = _LONG_SQDIST if _PQ_INT64_KERNELS else _DEC_SQDIST
-    dot_kernel = _LONG_DOT if _PQ_INT64_KERNELS else _DEC_DOT
     subv = spread_to_cores(_pq_sub_explode(e, F.col("e"), "vs"))
     enc0 = subv.join(F.broadcast(codebook), "s").withColumn(
-        "sqd", F.expr(sqd_kernel.format(a="vs", b="cs"))
+        "sqd", F.expr(_DEC_SQDIST.format(a="vs", b="cs"))
     )
     # nearest centroid per (vec_id, s): struct-min is lexicographic on
     # (sqd, cid) — identical to the previous row_number-over-(sqd, cid)
@@ -1775,17 +1697,14 @@ def _pq_search(
         .select("vec_id", "s", F.col("mn.cid").alias("cid"))
     )
 
-    q = (
-        e.filter(F.col("vec_id") % _PQ_QUERY_MOD == 0)
-        .orderBy("vec_id")
-        .limit(_PQ_QUERY_LIMIT)
-        .select(F.col("vec_id").alias("qid"), F.col("e").alias("qe"))
+    q = _capped_query_set(e, _PQ_QUERY_MOD, _PQ_QUERY_LIMIT).select(
+        F.col("vec_id").alias("qid"), F.col("e").alias("qe")
     )
     qsub = _pq_sub_explode(
         q.withColumnRenamed("qe", "e"), F.col("e"), "qs"
     )
     lut = qsub.join(F.broadcast(codebook), "s").select(
-        "qid", "s", "cid", F.expr(dot_kernel.format(a="qs", b="cs")).alias("d")
+        "qid", "s", "cid", F.expr(_DEC_DOT.format(a="qs", b="cs")).alias("d")
     )
 
     # ADC as an array-indexed LUT sum (round-13): the former shape
@@ -1838,49 +1757,32 @@ def _pq_search(
     # LUT, 8-term element_at sum, then a GLOBAL per-query window sort
     # over |corpus|·|q| rows — measured ~53 s of the 78 s post-truth-fix
     # wall at 500k, and the cost was the row machinery + 128M-row sort,
-    # not arithmetic (decimal and int64 kernels timed equal). The
-    # |q|·m·k LUT matrix is ~256 KB — it rides a task closure; each
-    # Arrow batch gathers its scores with one int64 fancy-index per
-    # query and emits only its batch-local top-10 under the global
-    # (score DESC, vec_id) order (same argument as _pq_exact_top10),
-    # so the final window touches ≤ 10·#batches rows per query. LUT
-    # values are exact 1e-9-unit integers in both kernel modes (the
-    # decimal mode converts via Decimal.scaleb — exact), keeping the
-    # A/B bit-identity.
+    # not arithmetic. The |q|·m·k LUT matrix is ~256 KB — it rides a
+    # task closure; each Arrow batch gathers its scores with one int64
+    # fancy-index per query and emits only its batch-local top-10
+    # (_top10_per_query, as _pq_exact_top10 does), so the final window
+    # touches ≤ 10·#batches rows per query. LUT
+    # values are DECIMAL(28,9) sums of 1e-9-unit terms, so
+    # Decimal.scaleb(9) turns each into its exact int64 unit count.
     import numpy as np
-    import pandas as pd
 
     lut_pdf = lut_arr.toPandas()
     q_ids_np = lut_pdf["qid"].to_numpy()
-    if _PQ_INT64_KERNELS:
-        tblm = np.array(lut_pdf["tbl"].tolist(), dtype=np.int64)
-    else:
-        tblm = np.array(
-            [[int(d.scaleb(9)) for d in row] for row in lut_pdf["tbl"]],
-            dtype=np.int64,
-        )
+    tblm = np.array(
+        [[int(d.scaleb(9)) for d in row] for row in lut_pdf["tbl"]],
+        dtype=np.int64,
+    )
     m_offsets = (np.arange(_PQ_M, dtype=np.int64) * _PQ_K)[None, :]
 
     def adc_scan(batches, q_ids=q_ids_np, tblm=tblm):
         for pdf in batches:
-            vids = pdf["vec_id"].to_numpy()
             codes_m = np.array(pdf["code"].tolist(), dtype=np.int64)
             flat = codes_m + m_offsets  # (B, m) flat LUT indices
-            out_q, out_v, out_s = [], [], []
-            for j in range(len(q_ids)):
-                scores = tblm[j][flat].sum(axis=1, dtype=np.int64)
-                sel = vids != q_ids[j]
-                svids, sc = vids[sel], scores[sel]
-                top = np.lexsort((svids, -sc))[:10]
-                out_q.append(np.full(len(top), q_ids[j], dtype=np.int64))
-                out_v.append(svids[top])
-                out_s.append(sc[top])
-            yield pd.DataFrame(
-                {
-                    "qid": np.concatenate(out_q),
-                    "nn_id": np.concatenate(out_v),
-                    "ascore": np.concatenate(out_s),
-                }
+            yield _top10_per_query(
+                q_ids,
+                pdf["vec_id"].to_numpy(),
+                lambda j: tblm[j][flat].sum(axis=1, dtype=np.int64),
+                ("qid", "nn_id", "ascore"),
             )
 
     adc = codes_arr.repartition(par).mapInPandas(
@@ -1908,8 +1810,7 @@ def _pq_search(
     w_q = Window.partitionBy("qid")
     # scaled-long → double: the long is the exact count of 1e-9 units
     # and stays ≪ 2^53, so long/1e9 is the correctly-rounded double of
-    # the exact value — identical to DECIMAL(…,9) → DOUBLE (the numpy
-    # ADC emits the scaled long in both kernel modes)
+    # the exact value — identical to DECIMAL(…,9) → DOUBLE
     ascore_out = F.col("ascore") / F.lit(1_000_000_000.0)
     return hits.select(
         F.col("qid").alias("query_id"),
@@ -1955,13 +1856,7 @@ def llm_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     analysis)."""
     emb = load(spark, sf_dir, "embeddings")
     e = emb.select("vec_id", _as_double("embedding").alias("e"))
-    anch = e.filter(F.col("vec_id") % _PQ_ANCHOR_MOD == 3).orderBy(
-        "vec_id"
-    ).limit(_PQ_K)
-    codebook = _pq_sub_explode(
-        anch.select(F.col("vec_id").alias("cid"), "e"), F.col("e"), "cs"
-    )
-    return _pq_search(e, codebook)
+    return _pq_search(e, _pq_anchor_codebook(e))
 
 
 def _pq_trained_codebook(spark: SparkSession, e: DataFrame) -> DataFrame:
@@ -2051,12 +1946,7 @@ def llm_ann_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     certificate's ground truth, test-scale-only by construction."""
     emb = load(spark, sf_dir, "embeddings")
     e = emb.select("vec_id", _as_double("embedding").alias("e"))
-    anch = e.filter(F.col("vec_id") % _PQ_ANCHOR_MOD == 3).orderBy(
-        "vec_id"
-    ).limit(_PQ_K)
-    cb_anchor = _pq_sub_explode(
-        anch.select(F.col("vec_id").alias("cid"), "e"), F.col("e"), "cs"
-    )
+    cb_anchor = _pq_anchor_codebook(e)
     cb_trained = _pq_trained_codebook(spark, e)
     exact10 = _pq_exact_top10(e)
 
@@ -2220,9 +2110,9 @@ def llm_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed SIZE, not a fixed fraction), broadcast against the corpus,
     so the scan is one map-side pass per side with a per-anchor argmax
     window — candidates never materialize beyond (anchor x corpus)
-    rows with 8-byte scores. Scores are round-then-DECIMAL dots: the
-    argmax (and therefore the mined triplet) cannot flip on summation
-    order. At 100 TB the corpus side routes through the LSH/IVF
+    rows with 8-byte scores. Scores are exact integers
+    (_exact_int_scores): the argmax (and therefore the mined triplet)
+    cannot flip on summation order. At 100 TB the corpus side routes through the LSH/IVF
     candidate generators first (llm_ann_lsh / llm_ann_ivf) — mining
     only probes bucket-mates, same gate as every pairwise kernel
     here.
@@ -2231,22 +2121,16 @@ def llm_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     profile caught in _pq_exact_top10 — a crossJoin evaluating a
     64-term decimal expression per pair (at 500k: 128M pairs × 64
     BigDecimal-allocating terms). Same fix: scores are
-    Σ floor(x·y·1e9 + 0.5) int64 (pure IEEE ops, identical in numpy
-    and DuckDB), the 256-anchor matrix rides a task closure, and each
-    Arrow batch emits only its local best positive and best negative
-    per anchor under the global (score DESC, vec_id) order — the
-    downstream windows rank ≤ 2·#batches candidates per anchor."""
+    _exact_int_scores, the 256-anchor matrix rides a task closure, and
+    each Arrow batch emits only its local best positive and best
+    negative per anchor under the global (score DESC, vec_id) order —
+    the downstream windows rank ≤ 2·#batches candidates per anchor."""
     import numpy as np
     import pandas as pd
 
     emb = load(spark, sf_dir, "embeddings")
     e = emb.select("vec_id", "label", _as_double("embedding").alias("e"))
-    a_pdf = (
-        e.filter(F.col("vec_id") % _HN_ANCHOR_MOD == 0)
-        .orderBy("vec_id")
-        .limit(_HN_ANCHOR_LIMIT)
-        .toPandas()
-    )
+    a_pdf = _capped_query_set(e, _HN_ANCHOR_MOD, _HN_ANCHOR_LIMIT).toPandas()
     a_ids = a_pdf["vec_id"].to_numpy()
     a_labels = a_pdf["label"].to_numpy()
     a_mat = np.array(a_pdf["e"].tolist(), dtype=np.float64)
@@ -2255,15 +2139,9 @@ def llm_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             vids = pdf["vec_id"].to_numpy()
             labels = pdf["label"].to_numpy()
-            mat = np.array(pdf["e"].tolist(), dtype=np.float64)
-            scores = np.empty((len(vids), len(a_ids)), dtype=np.int64)
-            for lo in range(0, len(vids), 256):
-                hi = min(lo + 256, len(vids))
-                t = mat[lo:hi, None, :] * a_mat[None, :, :]
-                t *= 1e9
-                t += 0.5
-                np.floor(t, out=t)
-                scores[lo:hi] = t.sum(axis=2, dtype=np.int64)
+            scores = _exact_int_scores(
+                np.array(pdf["e"].tolist(), dtype=np.float64), a_mat
+            )
             rows: list[tuple] = []
             for j in range(len(a_ids)):
                 same = labels == a_labels[j]

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from flume_hive_batch_sink_spark.io import load
+from flume_hive_batch_sink_spark.partitioning import scoped_conf
 from flume_hive_batch_sink_spark.registry import query
 
 # ---------------------------------------------------------------- projections
@@ -558,19 +559,15 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py asserts call 2 leaves the table files untouched).
     """
     out = bucketed_join_plan(spark, sf_dir)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         # Materialize ONCE under the no-broadcast conf and return the
         # local rows (the etl.py dynamic-partition-overwrite idiom): the
         # attested result is the one produced by the demonstrated
         # shuffle-free sort-merge plan, not a re-execution after the
-        # finally block restored broadcasting. ~5 mktsegment rows — NOT
-        # a data-sized collect. The plan gate (tests/test_plans.py)
+        # block restored broadcasting. ~5 mktsegment rows — NOT a
+        # data-sized collect. The plan gate (tests/test_plans.py)
         # inspects bucketed_join_plan directly under its own conf.
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 def ensure_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple:

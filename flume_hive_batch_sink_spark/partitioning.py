@@ -38,16 +38,15 @@ def shuffle_parallelism(df: DataFrame) -> int:
 @contextmanager
 def scoped_conf(spark: SparkSession, confs: dict[str, str]):
     """Set runtime SQL confs for the duration of a ``with`` block and
-    restore the previous values (or unset) on exit. Only safe around
-    work that COMPLETES inside the block (e.g. a streaming query run to
+    restore the previous values on exit. A key the session had not set
+    is unset again: ``spark.conf.get`` would return its default, and
+    setting that back would leave the key set. Only safe around work
+    that COMPLETES inside the block (e.g. a streaming query run to
     termination); a lazy DataFrame returned out of the block executes
     under whatever the session conf is at action time."""
-    prior: dict[str, str | None] = {}
+    set_now = spark.conf.getAll
+    prior = {k: set_now.get(k) for k in confs}
     for k, v in confs.items():
-        try:
-            prior[k] = spark.conf.get(k)
-        except Exception:
-            prior[k] = None
         spark.conf.set(k, v)
     try:
         yield spark

@@ -205,11 +205,10 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream inner join with a time-range condition and
     watermarks on both sides — purchases within 2h after a signup. Inner
     join results are batching-invariant, so the batch range join is an
-    exact oracle."""
-    joined = purchase_signup_join(
-        harness.events_stream(spark, sf_dir),
-        harness.events_stream(spark, sf_dir),
-    )
+    exact oracle. Both sides read one staged stream (a self-join), so
+    the fixture is staged once."""
+    events = harness.events_stream(spark, sf_dir)
+    joined = purchase_signup_join(events, events)
     return harness.run_with_progress(
         joined, "ss_join", "append", spark,
         state_partitions=harness.events_stream_partitions(sf_dir),

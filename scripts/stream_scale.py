@@ -140,7 +140,8 @@ def main() -> None:
 
     run("windowed_agg", queries.hourly_window_counts(chunks()), "append")
     run("dedup_wm", queries.dedup_within_watermark(chunks()), "append")
-    run("ss_join", queries.purchase_signup_join(chunks(), chunks()), "append")
+    ss_src = chunks()  # one staged replay read by both join sides
+    run("ss_join", queries.purchase_signup_join(ss_src, ss_src), "append")
     run("custom_state", queries.per_user_counts(chunks()), "update")
     ttl_src = chunks(sentinel_offsets_min=state_ttl.SENTINELS_MIN)
     run("custom_state_ttl", state_ttl.ttl_counters_stream(spark, ttl_src), "update")

@@ -17,13 +17,14 @@ def test_ann_lsh_buckets_concentrate_similar_pairs(spark):
     similar on average than cross-bucket pairs."""
     from flume_hive_batch_sink_spark.io import load
     from flume_hive_batch_sink_spark.llm.similarity import (
-        cosine_pairs,
+        blocked_threshold_pairs,
         llm_ann_lsh,
     )
 
     emb = load(spark, SF_DIR, "embeddings")
     buckets = llm_ann_lsh(spark, SF_DIR)
-    pairs = cosine_pairs(emb, emb, upper_triangle=True)
+    # every cosine is ≥ -1, so a lower threshold keeps all vec_a < vec_b pairs
+    pairs = blocked_threshold_pairs(emb, -2.0)
     ba = buckets.select(F.col("vec_id").alias("vec_a"), F.col("bucket").alias("bk_a"))
     bb = buckets.select(F.col("vec_id").alias("vec_b"), F.col("bucket").alias("bk_b"))
     joined = pairs.join(ba, "vec_a").join(bb, "vec_b")

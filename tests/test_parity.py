@@ -24,11 +24,14 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_T2", "/root/testdata/sf0.01")
 
 @pytest.mark.parametrize("key", sorted(registry.QUERIES))
 def test_oracle_parity(spark, key):
+    conf_before = spark.conf.getAll
     df = registry.QUERIES[key](spark, SF_DIR)
     if key in registry.ORACLES:
         compare(df, registry.ORACLES[key], SF_DIR)
     else:
         assert df.count() > 0
+    # an operator must not leak session conf into the keys after it
+    assert spark.conf.getAll == conf_before
 
 
 def test_entry_smoke(spark):

@@ -1,8 +1,11 @@
 """Coarse-quantizer scaling contract for the IVF / SemDeDup family
 (llm/similarity.py): centroid count grows sublinearly and is capped,
 the SQL oracles derive the identical stride, Lloyd's training is
-sample-bounded, and the over-closure-budget assignment path (blocked
-GEMM join against a centroid DataFrame) agrees with the closure kernel.
+sample-bounded, the one centroid assigner (_centroid_probes) gives the
+same assignment on its over-closure-budget path (blocked GEMM join
+against a centroid DataFrame) as on its closure kernel, every key that
+assigns through it keeps its certificate or oracle on that path, and
+the blocked multiprobe relation's replication stays capped in n.
 """
 
 from __future__ import annotations
@@ -154,6 +157,14 @@ class TestJoinPathEndToEnd:
         row = S.llm_semdedup_kmeans(spark, SF).collect()[0]
         assert row["precision_ok"] and row["recall_ok"]
 
+    def test_semdedup_matches_oracle_on_join_path(self, spark, monkeypatch):
+        """llm_semdedup's stride-centroid assignment through the join
+        path: every keep bit must still equal its DuckDB oracle's."""
+        from oracle import compare
+
+        monkeypatch.setattr(S, "_ASSIGN_CLOSURE_DOUBLES", 0)
+        compare(S.llm_semdedup(spark, SF), S._SEMDEDUP_ORACLE, SF)
+
 
 class TestMultiprobeBlockScaling:
     """Round-15 (ADVICE r14): the d-side of the blocked multiprobe
@@ -206,26 +217,3 @@ class TestMultiprobeBlockScaling:
         lb = len(big._jdf.queryExecution().optimizedPlan().toString())
         lh = len(huge._jdf.queryExecution().optimizedPlan().toString())
         assert lh == lb, f"plan grows past the block-count cap: {lb} -> {lh}"
-
-
-class TestPQInt64Kernels:
-    """Round-15 (VERDICT r14 item 7): the PQ decimal kernels are exact
-    sums of 1e-9-unit terms, so the scaled-int64 twins must produce
-    BIT-IDENTICAL output — same codes (argmin is monotone under x·1e9),
-    same ranking, same double ascore (the scaled long stays ≪ 2^53, so
-    long/1e9 is the correctly-rounded double the decimal cast gives)."""
-
-    def _run(self, spark):
-        rows = [
-            (r["query_id"], r["rk"], r["nn_id"], r["ascore"],
-             r["in_exact10"], r["recall10"])
-            for r in S.llm_ann_pq(spark, SF).orderBy("query_id", "rk").collect()
-        ]
-        return rows
-
-    def test_int64_and_decimal_paths_bit_identical(self, spark, monkeypatch):
-        assert S._PQ_INT64_KERNELS is False  # decimal reference is default
-        ref = self._run(spark)
-        monkeypatch.setattr(S, "_PQ_INT64_KERNELS", True)
-        scaled = self._run(spark)
-        assert ref == scaled

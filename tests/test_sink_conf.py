@@ -188,6 +188,20 @@ def test_epoch_write_shuffles_unless_one_small_split(
     assert sink.read_sink_table(spark, out).count() == 400
 
 
+def test_scoped_conf_unsets_keys_the_session_had_not_set(spark):
+    """scoped_conf leaves the session's set confs exactly as it found
+    them: a key that was not set before the block is unset after it,
+    not pinned to its default value."""
+    from flume_hive_batch_sink_spark.partitioning import scoped_conf
+
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    spark.conf.unset(key)
+    before = spark.conf.getAll
+    with scoped_conf(spark, {key: "2MB", "spark.sql.shuffle.partitions": "3"}):
+        assert spark.conf.get(key) == "2MB"
+    assert spark.conf.getAll == before
+
+
 def test_session_checkpoints_through_filesystem_manager(spark, tmp_path):
     """get_spark's streams commit their logs through the FileSystem
     checkpoint manager, not the slower FileContext default."""
