@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flume_hive_batch_sink_spark.io import load
+from flume_hive_batch_sink_spark.llm.ngrams import word_ngrams
 from flume_hive_batch_sink_spark.registry import query
 
 # Keep-threshold in nats, calibrated on the fixture (word soup over a
@@ -147,26 +148,7 @@ def llm_wimbd_topngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     docs = load(spark, sf_dir, "documents")
-    t = F.split("text", " ")
-    n = F.size(t)
-    # trigrams via zip_with over three aligned slices of ONE split —
-    # NOT transform(sequence, i -> element_at(t, i)...): codegen does
-    # not common-subexpression-eliminate the array argument across a
-    # higher-order-function lambda boundary, so each element_at
-    # re-evaluates the split and the per-doc cost goes O(words²)
-    # (measured 344 s → 35 s at sf10 for this exact expression). The
-    # greatest(n−2, 0) clamp doubles as the n<3 guard: all three
-    # slices are empty, so short docs contribute nothing.
-    m = F.greatest(n - 2, F.lit(0))
-    tri = F.zip_with(
-        F.zip_with(
-            F.slice(t, 1, m),
-            F.slice(t, 2, m),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        ),
-        F.slice(t, 3, m),
-        lambda ab, c: F.concat(ab, F.lit(" "), c),
-    )
+    tri = word_ngrams(F.split("text", " "), 3)
     cnt = (
         docs.select(F.explode(tri).alias("ngram"))
         .groupBy("ngram")

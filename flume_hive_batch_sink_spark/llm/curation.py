@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from flume_hive_batch_sink_spark.io import load
+from flume_hive_batch_sink_spark.llm.ngrams import char_kgram_hashes, word_ngrams
 from flume_hive_batch_sink_spark.registry import query
 
 _EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
@@ -116,16 +117,7 @@ def llm_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("cnt").alias("max_tok"),
         )
     )
-    # zip_with slices, not transform+element_at: the HOF-lambda indexed
-    # form re-evaluates the split per element (O(words²)/doc — round-12
-    # finding) and its sequence() descends for 1-word docs
-    _t = F.split("text", " ")
-    _m = F.greatest(F.size(_t) - 1, F.lit(0))
-    bigrams = F.zip_with(
-        F.slice(_t, 1, _m),
-        F.slice(_t, 2, _m),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
+    bigrams = word_ngrams(F.split("text", " "), 2)
     bg = d.select("doc_id", bigrams.alias("bigrams"))
     dup_bigram = F.when(F.size("bigrams") == 0, F.lit(0.0)).otherwise(
         F.round(
@@ -178,25 +170,7 @@ def llm_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (e.g. GPT-3/PaLM style 13-gram overlap, scaled to the fixture's
     short docs)."""
     d = load(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    # arrays_zip over five aligned slices of ONE split — the HOF-lambda
-    # indexed form re-evaluated the split per element (O(5·words²)/doc,
-    # round-12 finding); the greatest() clamp replaces the size>=5 guard
-    # (all five slices empty for short docs)
-    m5 = F.greatest(F.size(toks) - 4, F.lit(0))
-    z5 = F.arrays_zip(
-        F.slice(toks, 1, m5),
-        F.slice(toks, 2, m5),
-        F.slice(toks, 3, m5),
-        F.slice(toks, 4, m5),
-        F.slice(toks, 5, m5),
-    )
-    shingles = F.transform(
-        z5,
-        lambda s: F.md5(
-            F.concat_ws(" ", s["0"], s["1"], s["2"], s["3"], s["4"])
-        ),
-    )
+    shingles = F.transform(word_ngrams(F.split("text", " "), 5), F.md5)
     grams = d.select(
         "doc_id", "source", F.explode(shingles).alias("g")
     )
@@ -354,14 +328,7 @@ def llm_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     clean = base.join(keepers.select("doc_id"), "doc_id", "left_semi")
 
-    shingles = F.when(
-        F.size(F.split("text", " ")) >= 5,
-        F.expr(
-            "transform(sequence(1, size(split(text,' ')) - 4), j -> "
-            "md5(concat_ws(' ', split(text,' ')[j-1], split(text,' ')[j], "
-            "split(text,' ')[j+1], split(text,' ')[j+2], split(text,' ')[j+3])))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    shingles = F.transform(word_ngrams(F.split("text", " "), 5), F.md5)
     bench_grams = (
         d.filter(F.col("doc_id") % 97 == 0)
         .select(F.explode(shingles).alias("g"))
@@ -522,14 +489,7 @@ def llm_curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     k = 32
     with_grams = clean.filter(F.length("text") >= k)
-    grams = with_grams.select(
-        "doc_id",
-        F.explode(F.expr(f"sequence(1, length(text) - {k - 1})")).alias("pos"),
-        "text",
-    ).select(
-        "doc_id",
-        F.xxhash64(F.col("text").substr(F.col("pos"), F.lit(k))).alias("ghash"),
-    )
+    grams = char_kgram_hashes(with_grams, k).select("doc_id", "ghash")
     dup_keys = (
         grams.groupBy("ghash")
         .agg(F.count_distinct("doc_id").alias("ndoc"))
@@ -609,13 +569,7 @@ def llm_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("t") >= 5)
         .select(
             "source",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(t) - 4), "
-                    "j -> concat_ws(' ', t[j-1], t[j], t[j+1], t[j+2], "
-                    "t[j+3]))"
-                )
-            ).alias("gram"),
+            F.explode(word_ngrams(F.col("t"), 5)).alias("gram"),
         )
         .distinct()
     )

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from flume_hive_batch_sink_spark.io import load
+from flume_hive_batch_sink_spark.llm.ngrams import char_kgram_hashes, word_ngrams
 from flume_hive_batch_sink_spark.partitioning import (
     shuffle_parallelism,
     spread_to_cores,
@@ -187,6 +188,16 @@ def _sampled_recatch_audit(
     }
 
 
+def _bucket_widths(bands: DataFrame) -> DataFrame:
+    """(band_idx, band_key, w): the width of every colliding band bucket
+    (w > 1) of a ``minhash_bands`` relation — a partial-agg'd count."""
+    return (
+        bands.groupBy("band_idx", "band_key")
+        .agg(F.count("*").alias("w"))
+        .filter(F.col("w") > 1)
+    )
+
+
 def _apply_candidate_budget(
     bands: DataFrame,
     budget: int,
@@ -222,11 +233,7 @@ def _apply_candidate_budget(
     meet the budget — at that point the banding operating point itself
     is wrong for the corpus and `llm_lsh_band_sweep` is the
     recalibration tool."""
-    prof = (
-        bands.groupBy("band_idx", "band_key")
-        .agg(F.count("*").alias("w"))
-        .filter(F.col("w") > 1)
-    )
+    prof = _bucket_widths(bands)
     pairs_of_w = (F.col("w") * (F.col("w") - F.lit(1)) / F.lit(2)).cast("long")
     total = prof.agg(F.sum(pairs_of_w).alias("p")).collect()[0]["p"] or 0
     info: dict = {
@@ -371,6 +378,76 @@ def token_arrays(docs: DataFrame) -> DataFrame:
     return docs.select(
         "doc_id", F.array_distinct(F.split("text", " ")).alias("toks")
     )
+
+
+def _jaccard(ni: F.Column, na: F.Column, nb: F.Column) -> F.Column:
+    """|A ∩ B| / |A ∪ B| as DOUBLE, from |A ∩ B| and both set sizes."""
+    return ni.cast("double") / (na + nb - ni)
+
+
+def _verify_overlap(
+    candidates: DataFrame, arrays: DataFrame, score, t: float, name: str
+) -> DataFrame:
+    """Exact verify of candidate pairs (doc_a, doc_b): attach both
+    sides' set arrays from ``arrays`` (doc_id, one array column) — joins
+    on doc_id, broadcast at test scale and co-partitioned shuffle joins
+    at 100 TB — take |∩| per pair with codegen ``array_intersect``, and
+    keep the pairs whose ``score(ni, na, nb)`` is ≥ ``t``, reported
+    rounded to 6 places as ``name``. Only the candidate pairs are ever
+    intersected, never an exploded element⋈element join."""
+    arr = arrays.columns[1]
+    pa = arrays.select(F.col("doc_id").alias("doc_a"), F.col(arr).alias("sa"))
+    pb = arrays.select(F.col("doc_id").alias("doc_b"), F.col(arr).alias("sb"))
+    verified = (
+        candidates.join(pa, "doc_a")
+        .join(pb, "doc_b")
+        .withColumn("ni", F.size(F.array_intersect("sa", "sb")))
+        .withColumn("na", F.size("sa"))
+        .withColumn("nb", F.size("sb"))
+    )
+    sc = score(F.col("ni"), F.col("na"), F.col("nb"))
+    return verified.filter(sc >= t).select(
+        "doc_a", "doc_b", F.round(sc, 6).alias(name)
+    )
+
+
+def _rarest_first(
+    shingles: DataFrame, t: float, df_cap: int | None = None
+) -> DataFrame:
+    """Per-doc shingle sets in the global rarest-first order (document
+    frequency asc, shingle asc): (doc_id, ``hs`` the xxhash64 of each
+    shingle, ``ss`` the shingle strings, ``prefix`` the first
+    n − ⌈t·n⌉ + 1 of ``hs``). The same order on every doc is what makes
+    a prefix filter and a positional filter sound. ``shingles`` is
+    (doc_id, shingle), distinct per doc; ``df_cap`` drops the shingles
+    in more than that many docs from the sets (a stop-list bound)."""
+    freq = shingles.groupBy("shingle").agg(F.count("*").alias("df"))
+    if df_cap is not None:
+        freq = freq.filter(F.col("df") <= df_cap)
+    ranked = (
+        shingles.join(freq, "shingle")
+        .groupBy("doc_id")
+        .agg(
+            F.array_sort(F.collect_list(F.struct("df", "shingle"))).alias(
+                "ranked"
+            )
+        )
+    )
+    n = F.size("ranked")
+    plen = (n - F.ceil(F.lit(t) * n) + 1).cast("int")
+    hs = F.transform("ranked", lambda s: F.xxhash64(s["shingle"]))
+    return ranked.select(
+        "doc_id",
+        hs.alias("hs"),
+        F.transform("ranked", lambda s: s["shingle"]).alias("ss"),
+        F.slice(hs, 1, plen).alias("prefix"),
+    )
+
+
+def _word_bigrams(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingle): the distinct word bigrams of each doc."""
+    bigrams = F.array_distinct(word_ngrams(F.split("text", " "), 2))
+    return docs.select("doc_id", F.explode(bigrams).alias("shingle"))
 
 
 def minhash_position(toks: F.Column, k: int, h) -> F.Column:
@@ -681,29 +758,14 @@ def llm_near_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _surface_guard_decision(LAST_MINHASH_GUARD)
 
-    # exact verify on the surviving pairs only: attach both token arrays
-    # (joins on doc_id — broadcast at test scale, co-partitioned shuffle
-    # joins at 100 TB) and intersect in codegen. Replaces the exploded
-    # token⋈token join whose output was |pairs|·|overlap| rows. Tokens
-    # are intersected as xxhash64 values (8-byte comparisons instead of
-    # strings; distinct-token sets, so |∩| is unchanged barring a 64-bit
+    # exact verify on the surviving pairs only. Tokens are intersected
+    # as xxhash64 values (8-byte comparisons instead of strings;
+    # distinct-token sets, so |∩| is unchanged barring a 64-bit
     # collision ~1e-9 for this vocabulary).
     hashed = tok_arr.select(
         "doc_id", F.transform("toks", lambda t: F.xxhash64(t)).alias("toks")
     )
-    pa = hashed.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("ta"))
-    pb = hashed.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("tb"))
-    verified = (
-        candidates.join(pa, "doc_a")
-        .join(pb, "doc_b")
-        .withColumn("ni", F.size(F.array_intersect("ta", "tb")))
-        .withColumn("na", F.size("ta"))
-        .withColumn("nb", F.size("tb"))
-    )
-    jac = F.col("ni").cast("double") / (F.col("na") + F.col("nb") - F.col("ni"))
-    return verified.filter(jac >= _JACCARD_T).select(
-        "doc_a", "doc_b", F.round(jac, 6).alias("jaccard")
-    )
+    return _verify_overlap(candidates, hashed, _jaccard, _JACCARD_T, "jaccard")
 
 
 _BIGRAM_T = 0.6
@@ -746,43 +808,7 @@ def llm_jaccard_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     collisions, not corpus size².
     """
     docs = load(spark, sf_dir, "documents")
-    t = F.split("text", " ")
-    # bigrams via zip_with over two aligned slices of ONE split (the
-    # llm_gopher_repetition idiom) — NOT transform(sequence,
-    # i -> element_at(t, i)): codegen does not CSE the array argument
-    # across a HOF lambda boundary, so each element_at re-evaluated the
-    # split and the per-doc cost went O(words²) (round-12 finding,
-    # measured 10× on the trigram sibling at sf10)
-    m = F.greatest(F.size(t) - 1, F.lit(0))
-    bigrams = F.array_distinct(
-        F.zip_with(
-            F.slice(t, 1, m),
-            F.slice(t, 2, m),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        )
-    )
-    sh = docs.select("doc_id", F.explode(bigrams).alias("shingle"))
-
-    # global order: rarest shingle first (df asc, shingle asc tiebreak)
-    freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    ranked = (
-        sh.join(freq, "shingle")
-        .groupBy("doc_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("df", "shingle"))
-            ).alias("ranked")
-        )
-    )
-    n = F.size("ranked")
-    plen = (n - F.ceil(F.lit(_BIGRAM_T) * n) + 1).cast("int")
-    docs_arr = ranked.select(
-        "doc_id",
-        F.transform("ranked", lambda s: F.xxhash64(s["shingle"])).alias("hs"),
-        F.slice(F.transform("ranked", lambda s: F.xxhash64(s["shingle"])), 1, plen).alias(
-            "prefix"
-        ),
-    )
+    docs_arr = _rarest_first(_word_bigrams(docs), _BIGRAM_T)
 
     # PPJoin positional filter (also exact): a match at 0-based prefix
     # position p leaves at most |d| − p overlappable elements, and
@@ -819,19 +845,8 @@ def llm_jaccard_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(par, "doc_a", "doc_b")
         .dropDuplicates(["doc_a", "doc_b"])
     )
-
-    pa = docs_arr.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("ha"))
-    pb = docs_arr.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hb"))
-    verified = (
-        candidates.join(pa, "doc_a")
-        .join(pb, "doc_b")
-        .withColumn("ni", F.size(F.array_intersect("ha", "hb")))
-        .withColumn("na", F.size("ha"))
-        .withColumn("nb", F.size("hb"))
-    )
-    jac = F.col("ni").cast("double") / (F.col("na") + F.col("nb") - F.col("ni"))
-    return verified.filter(jac >= _BIGRAM_T).select(
-        "doc_a", "doc_b", F.round(jac, 6).alias("jaccard")
+    return _verify_overlap(
+        candidates, docs_arr.select("doc_id", "hs"), _jaccard, _BIGRAM_T, "jaccard"
     )
 
 
@@ -977,15 +992,7 @@ def llm_substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
         .filter(F.length("text") >= k)
     )
-    grams = docs.select(
-        "doc_id",
-        F.explode(F.expr(f"sequence(1, length(text) - {k - 1})")).alias("pos"),
-        "text",
-    ).select(
-        "doc_id",
-        "pos",
-        F.xxhash64(F.col("text").substr(F.col("pos"), F.lit(k))).alias("ghash"),
-    )
+    grams = char_kgram_hashes(docs, k)
     dup_keys = (
         grams.groupBy("ghash")
         .agg(F.count_distinct("doc_id").alias("nd"))
@@ -1088,45 +1095,8 @@ def llm_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
        containment value, matching the oracle bit-for-bit).
     """
     docs = load(spark, sf_dir, "documents")
-    t = F.split("text", " ")
-    # zip_with slices, not transform+element_at — see llm_jaccard_dedup:
-    # the HOF-lambda element_at form re-evaluates the split per access
-    # (O(words²) per doc, the round-12 finding)
-    m = F.greatest(F.size(t) - 1, F.lit(0))
-    bigrams = F.array_distinct(
-        F.zip_with(
-            F.slice(t, 1, m),
-            F.slice(t, 2, m),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        )
-    )
-    sh0 = docs.select("doc_id", F.explode(bigrams).alias("shingle"))
-    freq = (
-        sh0.groupBy("shingle")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") <= _CONTAIN_DF_CAP)
-    )
-    # per-doc shingle arrays in the global rarest-first order (df asc,
-    # shingle asc) — the same order on every doc makes the positional
-    # filter sound
-    ranked = (
-        sh0.join(freq, "shingle")
-        .groupBy("doc_id")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("df", "shingle"))).alias(
-                "ranked"
-            )
-        )
-    )
-    n = F.size("ranked")
-    plen = (n - F.ceil(F.lit(_CONTAIN_T) * n) + 1).cast("int")
-    hs = F.transform("ranked", lambda s: F.xxhash64(s["shingle"]))
-    ss = F.transform("ranked", lambda s: s["shingle"])
-    docs_arr = ranked.select(
-        "doc_id",
-        hs.alias("hs"),
-        ss.alias("ss"),
-        F.slice(hs, 1, plen).alias("prefix"),
+    docs_arr = _rarest_first(
+        _word_bigrams(docs), _CONTAIN_T, df_cap=_CONTAIN_DF_CAP
     )
     probe = docs_arr.select(
         F.col("doc_id").alias("doc_a"),
@@ -1150,16 +1120,12 @@ def llm_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
         .distinct()
     )
-    pa = docs_arr.select(F.col("doc_id").alias("doc_a"), F.col("ss").alias("sa"))
-    pb = docs_arr.select(F.col("doc_id").alias("doc_b"), F.col("ss").alias("sb"))
-    verified = (
-        candidates.join(pa, "doc_a")
-        .join(pb, "doc_b")
-        .withColumn("ni", F.size(F.array_intersect("sa", "sb")))
-    )
-    cont = F.col("ni").cast("double") / F.size("sa")
-    return verified.filter(cont >= _CONTAIN_T).select(
-        "doc_a", "doc_b", F.round(cont, 6).alias("containment")
+    return _verify_overlap(
+        candidates,
+        docs_arr.select("doc_id", "ss"),
+        lambda ni, na, nb: ni.cast("double") / na,
+        _CONTAIN_T,
+        "containment",
     )
 
 
@@ -1380,11 +1346,7 @@ def _exact_jaccard_pairs(
     return (
         pa.join(pb, cond)
         .withColumn("ni", F.size(F.array_intersect("ta", "tb")))
-        .withColumn(
-            "j",
-            F.col("ni").cast("double")
-            / (F.size("ta") + F.size("tb") - F.col("ni")),
-        )
+        .withColumn("j", _jaccard(F.col("ni"), F.size("ta"), F.size("tb")))
         .filter(F.col("j") >= min_j)
         .select("doc_a", "doc_b", "j")
     )
@@ -1987,11 +1949,8 @@ def llm_lsh_bucket_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     why the guard can afford to run unconditionally before every
     pair-generation stage."""
     toks = token_arrays(load(spark, sf_dir, "documents"))
-    prof = (
+    prof = _bucket_widths(
         minhash_bands(toks, _PR_BANDS, _PR_ROWS, F.md5, _md5_band_key)
-        .groupBy("band_idx", "band_key")
-        .agg(F.count("*").alias("w"))
-        .filter(F.col("w") > 1)
     )
     return prof.groupBy("band_idx").agg(
         F.count("*").cast("long").alias("n_buckets"),
@@ -2132,11 +2091,7 @@ def llm_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ni = F.size(F.array_intersect("ta", "tb"))
     pairs = a.join(b, F.col("doc_a") < F.col("doc_b")).select(
-        (
-            ni.cast("double")
-            / (F.size("ta") + F.size("tb") - ni)
-            >= _PR_T
-        ).alias("is_truth"),
+        (_jaccard(ni, F.size("ta"), F.size("tb")) >= _PR_T).alias("is_truth"),
         *[coll(nb, r).alias(f"c_{nb}_{r}") for nb, r in _SWEEP_SPLITS],
     )
     agg = pairs.agg(

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flume_hive_batch_sink_spark.io import load
+from flume_hive_batch_sink_spark.llm.ngrams import word_ngrams
 from flume_hive_batch_sink_spark.registry import query
 
 # Keep-thresholds, calibrated on the driver fixture so both classes are
@@ -83,12 +84,7 @@ def llm_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     n = F.size(toks)
-    # bigram i = toks[i] + ' ' + toks[i+1]; slice is 1-indexed
-    bigrams = F.zip_with(
-        F.slice(toks, 1, F.greatest(n - 1, F.lit(0))),
-        F.slice(toks, 2, F.greatest(n - 1, F.lit(0))),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
+    bigrams = word_ngrams(toks, 2)
     # max run length in the sorted bigram array = max occurrence count
     top_bg = F.aggregate(
         F.array_sort(bigrams),

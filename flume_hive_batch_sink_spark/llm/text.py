@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from flume_hive_batch_sink_spark.io import load
+from flume_hive_batch_sink_spark.llm.ngrams import word_ngrams
 from flume_hive_batch_sink_spark.registry import query
 
 
@@ -264,22 +265,10 @@ def llm_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def llm_ngram_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-20 bigrams. Bigrams are built by array slicing inside
-    the row (no positional self-join), then one explode + hash-agg.
-
-    zip_with over two aligned slices of ONE split — the earlier
-    transform(sequence, j -> split(text)[j]...) form re-evaluated the
-    split PER LAMBDA ELEMENT (codegen does not CSE an expression across
-    a higher-order-function boundary), making bigram construction
-    O(words²) per document (the round-12 finding, 10× on the corpus
-    n-gram keys at sf10)."""
+    the row (no positional self-join, ngrams.word_ngrams), then one
+    explode + hash-agg."""
     d = load(spark, sf_dir, "documents")
-    t = F.split("text", " ")
-    m = F.greatest(F.size(t) - 1, F.lit(0))
-    bigrams = F.zip_with(
-        F.slice(t, 1, m),
-        F.slice(t, 2, m),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
+    bigrams = word_ngrams(F.split("text", " "), 2)
     counted = (
         d.select(F.explode(bigrams).alias("bigram"))
         .groupBy("bigram")
@@ -307,25 +296,10 @@ def llm_ngram_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 def llm_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling-hash document fingerprint: min md5 over 3-token shingles
     (winnowing with one global window). Pure array expressions — the
-    shingle set never materializes as rows.
-
-    Shingles come from arrays_zip over three aligned slices of ONE
-    split: the earlier transform(sequence, j -> split(text)[j]...)
-    re-evaluated the split per lambda element (no CSE across a HOF
-    boundary — O(words²)/doc, the round-12 finding), and its
-    sequence(1, size-2) DESCENDED for <3-word docs, fabricating
-    phantom shingles from NULL-skipping concat_ws where the oracle's
-    range() is empty. The greatest() clamp yields an empty shingle set
-    (NULL fingerprint) for short docs, matching the oracle exactly."""
+    shingle set never materializes as rows. A doc of fewer than 3 words
+    has no shingle and a NULL fingerprint, as in the oracle."""
     d = load(spark, sf_dir, "documents")
-    t = F.split("text", " ")
-    m = F.greatest(F.size(t) - 2, F.lit(0))
-    z = F.arrays_zip(F.slice(t, 1, m), F.slice(t, 2, m), F.slice(t, 3, m))
-    fp = F.array_min(
-        F.transform(
-            z, lambda s: F.md5(F.concat_ws(" ", s["0"], s["1"], s["2"]))
-        )
-    )
+    fp = F.array_min(F.transform(word_ngrams(F.split("text", " "), 3), F.md5))
     return d.select("doc_id", fp.alias("fingerprint"))
 
 
@@ -739,11 +713,7 @@ def llm_winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.select("doc_id", F.split("text", " ").alias("t"))
         .filter(F.size("t") >= 3)
         .select(
-            "doc_id",
-            F.expr(
-                "transform(sequence(1, size(t) - 2), "
-                "j -> md5(concat_ws(' ', t[j-1], t[j], t[j+1])))"
-            ).alias("hs"),
+            "doc_id", F.transform(word_ngrams(F.col("t"), 3), F.md5).alias("hs")
         )
     )
     fps = F.expr(
@@ -867,12 +837,7 @@ def llm_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("t") >= 3)
         .select(
             "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(t) - 2), "
-                    "j -> concat_ws(' ', t[j-1], t[j], t[j+1]))"
-                )
-            ).alias("gram"),
+            F.explode(word_ngrams(F.col("t"), 3)).alias("gram"),
         )
         .distinct()
     )

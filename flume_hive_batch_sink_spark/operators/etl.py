@@ -613,10 +613,12 @@ def etl_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
     """Dynamic partition overwrite — the idempotent-backfill primitive:
     a correction batch (doubled purchase values for Jan 20+) overwrites
     ONLY the day-partitions it contains; untouched history is never
-    rewritten or even listed. Uses Spark's native
-    ``partitionOverwriteMode=dynamic`` (the INSERT OVERWRITE semantics
-    a Hive-partitioned sink needs for exactly-once replays — the
-    reference's batch-replace analogue). The read-back aggregate shows
+    rewritten or even listed. Both writes go through the engine's one
+    Hive-partitioned writer (ingest.hive_partitioned_write_path), whose
+    writer-scoped ``partitionOverwriteMode=dynamic`` is Spark's native
+    INSERT OVERWRITE (the semantics a Hive-partitioned sink needs for
+    exactly-once replays — the reference's batch-replace analogue).
+    The read-back aggregate shows
     partitions >= the cutoff now contain only the correction batch.
     At 100 TB this is THE mechanism that bounds a backfill's write
     amplification to the touched partitions."""
@@ -624,15 +626,21 @@ def etl_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
     import shutil
     import tempfile
 
+    from flume_hive_batch_sink_spark.operators.ingest import (
+        hive_partitioned_write_path,
+    )
+
     ev = load(spark, sf_dir, "events").withColumn(
         "dt", F.date_format("ts", "yyyy-MM-dd")
     )
     base = tempfile.mkdtemp(prefix="dpo_")
     try:
         tbl = _os.path.join(base, "events_by_dt")
-        ev.select("event_id", "value", "event_type", "dt").write.mode(
-            "overwrite"
-        ).partitionBy("dt").parquet(tbl)
+        hive_partitioned_write_path(
+            ev.select("event_id", "value", "event_type", "dt"),
+            tbl,
+            partition_cols=("dt",),
+        )
 
         corrections = (
             ev.filter(
@@ -642,11 +650,9 @@ def etl_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
             .withColumn("value", F.col("value") * 2)
             .select("event_id", "value", "event_type", "dt")
         )
-        # writer-scoped dynamic mode: no session-global conf mutation,
-        # so concurrent queries on the same session are unaffected.
-        corrections.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("dt").parquet(tbl)
+        # the writer's overwrite is dynamic and writer-scoped: only the
+        # corrected days are replaced, and the session conf is untouched
+        hive_partitioned_write_path(corrections, tbl, partition_cols=("dt",))
 
         # partition-type inference turns the dt directory key back into
         # DATE; the written value (and the oracle contract) is the

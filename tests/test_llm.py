@@ -368,22 +368,52 @@ def test_doc_chunk_boundaries(spark):
 
 def test_decontaminate_flags_planted_overlap(spark):
     """A training doc that copies 5 consecutive tokens from an eval doc
-    (doc_id % 97 == 0) must be flagged; disjoint docs must not."""
-    from flume_hive_batch_sink_spark.llm import curation
-
-    rows = [
-        (0, "srcA", "alpha beta gamma delta epsilon zeta"),  # eval (0 % 97 == 0)
-        (1, "srcB", "xx alpha beta gamma delta epsilon yy"),  # overlaps
-        (2, "srcC", "one two three four five six seven"),  # clean
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
+    (doc_id % 97 == 0) must be flagged; disjoint docs must not. The
+    curation pipeline's decontamination stage drops the same doc (and
+    the eval doc), matching its oracle."""
     import tempfile
 
+    from flume_hive_batch_sink_spark.llm import curation
+    from oracle import TABLES, compare
+
+    rows = [
+        (0, "srcA", "en", 100, "alpha beta gamma delta epsilon zeta"),  # eval
+        (1, "srcB", "de", 100, "xx alpha beta gamma delta epsilon yy"),  # overlaps
+        (2, "srcC", "fr", 100, "one two three four five six seven"),  # clean
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id long, source string, lang string, n_chars long, text string"
+    )
     with tempfile.TemporaryDirectory() as td:
-        df.write.mode("overwrite").parquet(f"{td}/documents.parquet")
+        # one parquet file, not a Spark output directory: DuckDB's
+        # read_parquet does not open a directory path
+        df.toPandas().to_parquet(f"{td}/documents.parquet")
+        for t in TABLES:  # the oracle connection opens every table
+            if t != "documents":
+                os.symlink(f"{SF_DIR}/{t}.parquet", f"{td}/{t}.parquet")
         flagged = curation.llm_decontaminate(spark, td).collect()
+        kept = curation.llm_curation_pipeline(spark, td)
+        compare(kept, curation._PIPELINE_ORACLE, td)
+        kept = kept.collect()
     ids = {r["doc_id"] for r in flagged}
     assert ids == {1}
+    assert [tuple(r) for r in kept] == [("fr", 1, 7)]
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 4, 5])
+def test_word_ngrams_matches_python(spark, n):
+    """word_ngrams equals the plain-Python n-grams of the split text for
+    docs of 0-7 words: a doc with fewer than n words gives [], never
+    phantom grams."""
+    from flume_hive_batch_sink_spark.llm.ngrams import word_ngrams
+
+    texts = ["", "one"] + [" ".join(f"w{i}" for i in range(k)) for k in range(2, 8)]
+    texts.append("a b a b a")  # repeated grams are kept
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    got = df.select("text", word_ngrams(F.split("text", " "), n).alias("g")).collect()
+    for r in got:
+        t = r["text"].split(" ")
+        assert r["g"] == [" ".join(t[i : i + n]) for i in range(len(t) - n + 1)]
 
 
 def test_block_index_cache_bounded_and_unpersists(spark):

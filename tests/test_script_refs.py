@@ -1,10 +1,13 @@
-"""Every engine name a script under scripts/ references must exist.
+"""Every engine name a script references must exist: the scripts under
+scripts/ and perfbench/, bench.py and the __spark_entry__.py entry
+point.
 
 A deletion or rename in the engine package otherwise leaves a script
-broken until someone runs it. Each script is parsed (not run); the
-names it imports with ``from flume_hive_batch_sink_spark… import …``
-and every ``alias.attr`` on an alias bound to an engine module are
-looked up in the imported modules.
+broken until someone runs it (for perfbench/, until the benchmark
+runs). Each script is parsed (not run); the names it imports with
+``from flume_hive_batch_sink_spark… import …`` and every
+``alias.attr`` on an alias bound to an engine module are looked up in
+the imported modules.
 """
 
 from __future__ import annotations
@@ -17,7 +20,13 @@ from types import ModuleType
 import pytest
 
 PKG = "flume_hive_batch_sink_spark"
-SCRIPTS = sorted((Path(__file__).resolve().parent.parent / "scripts").glob("*.py"))
+REPO = Path(__file__).resolve().parent.parent
+SCRIPTS = [
+    *sorted((REPO / "scripts").glob("*.py")),
+    *sorted((REPO / "perfbench").glob("*.py")),
+    REPO / "bench.py",
+    REPO / "__spark_entry__.py",
+]
 _MISSING = object()
 
 
@@ -77,7 +86,13 @@ def _missing_refs(src: str) -> list[str]:
     return missing
 
 
-@pytest.mark.parametrize("script", SCRIPTS, ids=lambda p: p.name)
+def _script_id(path: Path) -> str:
+    """scripts/ files by bare name, everything else by repo path."""
+    rel = path.relative_to(REPO)
+    return rel.name if rel.parts[0] == "scripts" else str(rel)
+
+
+@pytest.mark.parametrize("script", SCRIPTS, ids=_script_id)
 def test_script_references_existing_engine_names(script):
     assert _missing_refs(script.read_text()) == []
 
