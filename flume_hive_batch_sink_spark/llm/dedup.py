@@ -6,14 +6,18 @@ MinHash/LSH replaces the O(n²) pairwise scan with per-doc signatures
 SimHash gives a per-doc 16-bit sketch joinable by Hamming bands. Only the
 final *verify* step touches candidate pairs, whose count LSH controls.
 
-MinHash signatures are computed once per ``llm_near_dedup_minhash`` call:
-the band relation is local-checkpointed (non-eager), the candidate
-guard's width profile is the job that fills it, and the band join, the
-guard's drop/audit passes and any re-execution of the result read the
-checkpointed blocks instead of re-running scan → token arrays → 32
-signature HOFs. The MinHash and SimHash signature stages run behind
-``partitioning.spread_to_cores``, so a small corpus that arrives as one
-scan split still computes its signatures on every core.
+MinHash signatures (``minhash_signatures``, the one builder) are a
+code-generated aggregate: the distinct tokens are exploded once and each
+position is a ``min(h('i:' || token))``, partial before one Exchange on
+doc_id. They are computed once per ``llm_near_dedup_minhash`` call: the
+band relation is local-checkpointed (non-eager), the candidate guard's
+width profile is the job that fills it, and the band join, the guard's
+drop/audit passes and any re-execution of the result read the
+checkpointed blocks. The guard's measured candidate-slot count also
+sizes the pair join and pair dedup (``band_candidates``). The MinHash
+and SimHash signature stages run behind ``partitioning.spread_to_cores``,
+so a small corpus that arrives as one scan split still computes its
+signatures on every core.
 
 All hash families are deterministic (seeded by literal band/row indexes)
 — required by the oracle hash-match and by resume semantics.
@@ -22,6 +26,7 @@ All hash families are deterministic (seeded by literal band/row indexes)
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,6 +57,10 @@ _JACCARD_T = 0.8
 # salted self-join fanned across _BUCKET_SALTS reducers.
 _BUCKET_CAP = 64
 _BUCKET_SALTS = 16
+
+# Candidate slots (band-pair rows, Σ w(w−1)/2) per task of the pair join
+# and pair dedup when the guard has measured them (band_candidates).
+_PAIRS_PER_TASK = 250_000
 
 
 def _floor_fraction(t: float, max_den: int = 1000) -> tuple[int, int]:
@@ -201,8 +210,8 @@ def _bucket_widths(bands: DataFrame) -> DataFrame:
 def _apply_candidate_budget(
     bands: DataFrame,
     budget: int,
-    guard_info: dict | None,
-    n_docs: int | None = None,
+    guard_info: dict,
+    n_docs: Callable[[], int] | None = None,
 ) -> DataFrame:
     """Measure Σ w(w−1)/2 over band buckets; if over ``budget``, drop
     the widest buckets (deterministic order: width desc, then band_idx,
@@ -210,9 +219,10 @@ def _apply_candidate_budget(
     anti-join on the 8-byte bucket keys. Returns the (possibly
     filtered) bands relation; fills ``guard_info`` with the decision.
 
-    Density exemption: when ``n_docs`` is given and the candidate
-    multiset is a constant fraction of ALL pairs (total ≥ ¼·n(n−1)/2),
-    the corpus is globally self-similar — the sf1 driver fixture's
+    Density exemption: when ``n_docs`` (a zero-argument document
+    counter, called only once the total is over budget) is given and
+    the candidate multiset is a constant fraction of ALL pairs, the
+    corpus is globally self-similar — the sf1 driver fixture's
     31-word vocabulary is the canonical case (its TRUE Jaccard≥0.8
     graph is quadratic by construction, 7.85e9 band-pair slots at 50k
     docs) — and dropping buckets would corrupt an answer that is
@@ -257,14 +267,10 @@ def _apply_candidate_budget(
     # density ≈ 1 → exempt; an all-true-dup corpus at J ≈ t collides in
     # expected B·t^r ≈ 2.7 bands/pair → density ≈ 0.17 → exempt; the
     # r13 entropy-exhaustion probe (5e-4) and the 1/64-collider → guard.
-    if (
-        total > budget
-        and n_docs is not None
-        and total * 8 >= _BANDS * (n_docs * (n_docs - 1) // 2)
-    ):
+    n = n_docs() if total > budget and n_docs is not None else None
+    if n is not None and total * 8 >= _BANDS * (n * (n - 1) // 2):
         info["dense_corpus"] = True
-        if guard_info is not None:
-            guard_info.update(info)
+        guard_info.update(info)
         return bands
     if total > budget:
         top = (
@@ -318,8 +324,7 @@ def _apply_candidate_budget(
             )
         )
         bands = surviving
-    if guard_info is not None:
-        guard_info.update(info)
+    guard_info.update(info)
     return bands
 
 
@@ -450,21 +455,27 @@ def _word_bigrams(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", F.explode(bigrams).alias("shingle"))
 
 
-def minhash_position(toks: F.Column, k: int, h) -> F.Column:
-    """MinHash signature position ``k``: min over the token array of
-    ``h('k:' || token)``, an ``array_min(transform(...))`` expression.
-    ``transform`` (ArrayTransform) is CodegenFallback in Spark 4.1, so
-    the position is evaluated interpreted, once per token, inside an
-    otherwise code-generated stage. ``h`` is xxhash64 in production and
-    md5 in the DuckDB-replayable certificate family (``_pr_sig_sql``)."""
-    # NB: the seed must be bound via closure, NOT a defaulted second
-    # lambda parameter — PySpark treats ANY two-parameter lambda in
-    # transform() as (element, index) and passes the array-index Column
-    # into the second slot, silently clobbering the default (the seed
-    # then stringifies as the Column's repr). tests/test_llm.py pins
-    # the literal-seeded family against hand-computed values.
-    prefix = F.lit(f"{k}:")
-    return F.array_min(F.transform(toks, lambda t: h(F.concat(prefix, t))))
+def minhash_signatures(tok_arr: DataFrame, k: int, h: str) -> DataFrame:
+    """(doc_id, n, h0 … h{k−1}): per-doc MinHash signature of ``k``
+    positions over the distinct-token arrays of ``tok_arr`` (doc_id,
+    toks), with ``n`` the doc's distinct-token count. Position ``i`` is
+    the min over the doc's tokens of ``h('i:' || token)``; ``h`` names
+    a SQL hash function — ``xxhash64`` in production, ``md5`` in the
+    DuckDB-replayable certificate family (``_pr_sig_sql``), whose hex
+    strings compare in the same order as ``list_min`` over them.
+
+    The tokens are exploded once and the k minima are one aggregate on
+    (doc_id, n), partial (map-side) before its one Exchange on doc_id,
+    so the shuffle carries one row per doc: a code-generated hash
+    aggregate for xxhash64's longs, a sort aggregate for md5's strings
+    (no fixed-width buffer). Each position is built from a SQL string
+    (one ``F.expr``), which keeps the Python plan build to k calls."""
+    toks = tok_arr.select(
+        "doc_id", F.size("toks").alias("n"), F.explode("toks").alias("tok")
+    )
+    return toks.groupBy("doc_id", "n").agg(
+        *[F.expr(f"min({h}(concat('{i}:', tok))) AS h{i}") for i in range(k)]
+    )
 
 
 def _xxhash_band_key(b: int, cols: list[F.Column]) -> F.Column:
@@ -479,37 +490,32 @@ def minhash_bands(
     tok_arr: DataFrame,
     bands: int = _BANDS,
     rows: int = _ROWS,
-    h=F.xxhash64,
+    h: str = "xxhash64",
     band_key=_xxhash_band_key,
 ) -> DataFrame:
     """(doc_id, n, band_idx, band_key) rows for LSH bucketing.
 
-    Per-doc MinHash signature of ``bands × rows`` positions hashed by
-    ``h``; band ``b``'s key is ``band_key(b, slice)``. Defaults are the
-    production family: 16×2, xxhash64, an 8-byte band key (md5 strings
-    quadruple the shuffle width for no information gain). The
-    certificate keys pass (8, 2, md5, _md5_band_key), the bucket the
-    DuckDB oracles replay bit-exactly. The whole stage is PURE map-side:
-    scan → project → posexplode, zero Exchange — asserted by
-    tests/test_plans.py (the property that makes signatures free at
-    100 TB: they ride along the initial scan)."""
-    sig = tok_arr.select(
-        "doc_id",
-        F.size("toks").alias("n"),
-        *[
-            minhash_position(F.col("toks"), i, h).alias(f"h{i}")
-            for i in range(bands * rows)
-        ],
-    )
+    Per-doc MinHash signature (``minhash_signatures``) of
+    ``bands × rows`` positions hashed by the SQL function ``h``; band
+    ``b``'s key is ``band_key(b, slice)``. Defaults are the production
+    family: 16×2, xxhash64, an 8-byte band key (md5 strings quadruple
+    the shuffle width for no information gain). The certificate keys
+    pass (8, 2, "md5", _md5_band_key), the bucket the DuckDB oracles
+    replay bit-exactly. Plan: scan → explode → partial min aggregate →
+    one Exchange on doc_id (~one row of k hashes per doc) → final
+    aggregate → posexplode of the band keys, asserted by
+    tests/test_plans.py."""
+    sig = minhash_signatures(tok_arr, bands * rows, h)
     key_arr = F.array(
         *[
             band_key(b, [F.col(f"h{b * rows + r}") for r in range(rows)])
             for b in range(bands)
         ]
     )
-    # `n` (distinct-token count, one int riding the map-side explode) is
-    # what the size prefilter joins on inside band_candidates — it must
-    # exist BEFORE pair generation (round-13 sf100rv finding)
+    # `n` (distinct-token count, carried as a grouping key of the
+    # signature aggregate) is what the size prefilter joins on inside
+    # band_candidates — it must exist BEFORE pair generation (round-13
+    # sf100rv finding)
     return sig.select(
         "doc_id", "n", F.posexplode(key_arr).alias("band_idx", "band_key")
     )
@@ -522,7 +528,7 @@ def band_candidates(
     pair_pred=None,
     candidate_budget: int | None = None,
     guard_info: dict | None = None,
-    n_docs: int | None = None,
+    n_docs: Callable[[], int] | None = None,
 ) -> DataFrame:
     """Distinct candidate (doc_a, doc_b) pairs from band-bucket
     collisions, with a hot-bucket skew guard.
@@ -560,26 +566,32 @@ def band_candidates(
     the defense against band-key entropy exhaustion, where the salt
     guard bounds per-reducer work but the pair multiset itself
     overflows scratch. ``guard_info`` (a dict, filled in place)
-    receives the decision for probes/SCALE.md.
+    receives the decision for probes/SCALE.md, including the
+    ``fanout_partitions`` the pair stages run with; ``n_docs`` is the
+    density exemption's document counter (_apply_candidate_budget).
     """
-    if candidate_budget is not None:
-        bands = _apply_candidate_budget(
-            bands, candidate_budget, guard_info, n_docs=n_docs
-        )
-    # Fan-out-aware partitioning (round-15, guide §2.2/§2.5): the
-    # exchanges in this dataflow are byte-LIGHT but row-EXPLOSIVE — the
-    # band rows are ~16·n slim tuples (a few MB at sf0.1), while the
-    # pair join fans them out to Σ w² slots (83M rows at sf0.1's
-    # degenerate fixture). AQE coalesces shuffle partitions by INPUT
-    # bytes, so it shrank the join stage to ~2 tasks and the pair-dedup
-    # stage to a handful — measured 49.2 s for the candidate stage at
-    # sf0.1 with AQE on vs 10.3 s with it off (the work is identical;
-    # only the parallelism differs). Explicit repartition() is treated
-    # as user-specified by AQE and never coalesced, so both fan-out
-    # stages keep the session's full shuffle parallelism — a
-    # scale-adaptive knob (spark.sql.shuffle.partitions), not a local
-    # constant. Measured after: 11.6 s with AQE on (4.2×).
+    # Fan-out-aware partitioning: the exchanges in this dataflow are
+    # byte-LIGHT but row-EXPLOSIVE — the band rows are ~16·n slim tuples
+    # (a few MB at sf0.1), while the pair join fans them out to Σ w²
+    # slots (83M rows at sf0.1's degenerate fixture). AQE coalesces
+    # shuffle partitions by INPUT bytes, so it shrank the join stage to
+    # ~2 tasks (49.2 s for the candidate stage at sf0.1 with AQE on vs
+    # 10.3 s off). An explicit repartition() is user-specified to AQE and
+    # never coalesced, so both fan-out stages get a count sized by the
+    # work they do: when the guard ran, its measured slot count
+    # (kept_pairs) at _PAIRS_PER_TASK slots per task, capped at the
+    # session's shuffle parallelism; with the guard off, that
+    # parallelism. A small corpus (perfbench's 6k slots) thus runs the
+    # pair join and pair dedup as one task each instead of 32
+    # near-empty ones, and sf0.1 (83M slots) keeps all 32.
     par = shuffle_parallelism(bands)
+    if candidate_budget is not None:
+        info = guard_info if guard_info is not None else {}
+        bands = _apply_candidate_budget(
+            bands, candidate_budget, info, n_docs=n_docs
+        )
+        par = min(par, max(1, -(-info["kept_pairs"] // _PAIRS_PER_TASK)))
+        info["fanout_partitions"] = par
     w = F.count("*").over(Window.partitionBy("band_idx", "band_key"))
     bw = bands.repartition(par, "band_idx", "band_key").withColumn("w", w)
 
@@ -673,21 +685,23 @@ def llm_near_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle computes ground-truth all-pairs Jaccard; this pipeline
     must reproduce it exactly, which it does because the verify step is
     exact and LSH recall at the threshold is ~1-7e-8 (see module
-    constants). Signatures are array expressions over the per-doc token
-    array (map-side), computed once per call into a local-checkpointed
-    band relation that the guard profile and the band join share; band
-    joins shuffle only (band_idx, band_key); verify touches candidate
-    pairs only, via codegen array_intersect.
+    constants). Signatures are one code-generated min aggregate over the
+    exploded tokens (minhash_signatures), computed once per call into a
+    local-checkpointed band relation that the guard profile and the
+    band join share; band joins shuffle only (band_idx, band_key) over
+    as many tasks as the guard's measured slot count needs; verify
+    touches candidate pairs only, via codegen array_intersect.
     """
     docs = load(spark, sf_dir, "documents")
     # per-doc distinct token ARRAY — signatures and verify both work on
     # the array column, so no token row-explosion happens for the linear
     # passes
     tok_arr = token_arrays(docs)
-    # The signature stage is map-side; spread_to_cores adds one
-    # round-robin of the raw rows only when the corpus has fewer splits
-    # than cores (a small corpus is one split, and 32 interpreted HOFs
-    # per doc on one task left the other cores idle).
+    # The explode and the partial signature aggregate run in the scan
+    # stage; spread_to_cores adds one round-robin of the raw rows only
+    # when the corpus has fewer splits than cores (a small corpus is one
+    # split, and its 32 hashes per token on one task left the other
+    # cores idle).
     # Signatures are materialized ONCE: without the checkpoint the
     # guard's eager width profile ran scan → token arrays → signatures,
     # and the candidate join ran the whole chain again (nothing sat
@@ -748,8 +762,9 @@ def llm_near_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         pair_pred=size_pred,
         candidate_budget=budget if budget > 0 else None,
         guard_info=LAST_MINHASH_GUARD,
-        # parquet metadata count — feeds the guard's density exemption
-        n_docs=docs.count() if budget > 0 else None,
+        # parquet metadata count for the guard's density exemption,
+        # run only when the candidate total is over budget
+        n_docs=docs.count,
     )
     if LAST_MINHASH_GUARD.get("triggered"):
         d = LAST_MINHASH_GUARD["bands_affected"]
@@ -884,19 +899,21 @@ def llm_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # md5 per token is the CPU-heavy stage: spread a few-split corpus
     # across the cores before the explode (partitioning.spread_to_cores)
     tok = _tokens(spread_to_cores(docs))
-    h = F.md5("token")
-    per_bit = [
-        F.sum(
-            F.when(F.substring(h, k + 1, 1).isin(list("89abcdef")), 1).otherwise(-1)
-        ).alias(f"s{k}")
-        for k in range(16)
-    ]
-    bits = tok.groupBy("doc_id").agg(*per_bit)
-    fingerprint = None
-    for k in range(16):
-        term = F.when(F.col(f"s{k}") >= 0, F.lit(1 << k)).otherwise(F.lit(0))
-        fingerprint = term if fingerprint is None else fingerprint + term
-    return bits.select("doc_id", fingerprint.cast("long").alias("simhash"))
+    # built from SQL strings: one Py4J call per bit and one for the
+    # fingerprint, where each Column-API bit expression takes dozens
+    bits = tok.groupBy("doc_id").agg(
+        *[
+            F.expr(
+                f"sum(CASE WHEN substring(md5(token), {k + 1}, 1) IN {_HI_HEX}"
+                f" THEN 1 ELSE -1 END) AS s{k}"
+            )
+            for k in range(16)
+        ]
+    )
+    fingerprint = " + ".join(
+        f"CASE WHEN s{k} >= 0 THEN {1 << k} ELSE 0 END" for k in range(16)
+    )
+    return bits.selectExpr("doc_id", f"CAST({fingerprint} AS BIGINT) AS simhash")
 
 
 @query(
@@ -1357,7 +1374,7 @@ def _minhash_estimate_frame(
 ) -> DataFrame:
     """The estimator-calibration dataflow shared by the full-corpus key
     (sf0.01 certificate tier) and the content-addressed-sampled key
-    (the 100 TB path): per-doc md5 signatures (map-side), the
+    (the 100 TB path): per-doc md5 signatures (minhash_signatures), the
     exact Jaccard truth over ``docs`` (_exact_jaccard_pairs), per-pair
     estimate vs truth."""
     tok_arr = token_arrays(docs)
@@ -1369,14 +1386,9 @@ def _minhash_estimate_frame(
     # zip_with compares 8-byte values. Same exactness class as the
     # accepted token-intersect transform: equal iff the md5 winners are
     # equal barring a ~1e-19/compare 64-bit collision.
-    sig = tok_arr.select(
+    sig = minhash_signatures(tok_arr, _EST_K, "md5").select(
         "doc_id",
-        F.array(
-            *[
-                F.xxhash64(minhash_position(F.col("toks"), k, F.md5))
-                for k in range(_EST_K)
-            ]
-        ).alias("sig"),
+        F.array(*[F.xxhash64(f"h{k}") for k in range(_EST_K)]).alias("sig"),
     )
     true_j = _exact_jaccard_pairs(tok_arr, _EST_MIN_J, pair_sampled)
 
@@ -1419,9 +1431,9 @@ def llm_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash values, and lexicographic order over identical md5 hex digests
     is engine-identical, so the oracle replays every signature position
     exactly (the sketch_bloom_prejoin convention, extended to string
-    keys). Spark shape: signatures are array_min/transform (interpreted,
-    see minhash_position) over the per-doc token array (map-side, zero
-    shuffle); the estimate is a zip_with equality fold over the two
+    keys). Spark shape: signatures are one partial min aggregate over
+    the exploded tokens (minhash_signatures, one Exchange on doc_id);
+    the estimate is a zip_with equality fold over the two
     16-element signature arrays — candidate pairs never explode into
     (pair x K) rows. At 100 TB the
     pair set comes from the LSH candidate generator, making this a
@@ -1782,7 +1794,7 @@ def _lsh_band_pr_frame(docs: DataFrame, pair_sampled: bool = False) -> DataFrame
     truth over ``docs``, and the precision/recall summary. The truth
     side is quadratic in len(docs) BY PURPOSE — the caller bounds it."""
     toks = token_arrays(docs)
-    bands = minhash_bands(toks, _PR_BANDS, _PR_ROWS, F.md5, _md5_band_key)
+    bands = minhash_bands(toks, _PR_BANDS, _PR_ROWS, "md5", _md5_band_key)
     a, b = bands.alias("a"), bands.alias("b")
     cand_cond = (
         (F.col("a.band_idx") == F.col("b.band_idx"))
@@ -1950,7 +1962,7 @@ def llm_lsh_bucket_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair-generation stage."""
     toks = token_arrays(load(spark, sf_dir, "documents"))
     prof = _bucket_widths(
-        minhash_bands(toks, _PR_BANDS, _PR_ROWS, F.md5, _md5_band_key)
+        minhash_bands(toks, _PR_BANDS, _PR_ROWS, "md5", _md5_band_key)
     )
     return prof.groupBy("band_idx").agg(
         F.count("*").cast("long").alias("n_buckets"),
@@ -2057,14 +2069,9 @@ def llm_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     are rounded from exact integers, NULL-guarded on empty candidate
     sets."""
     toks = token_arrays(_est_sample(load(spark, sf_dir, "documents")))
-    sigs = toks.select(
-        "doc_id",
-        "toks",
-        *[
-            minhash_position(F.col("toks"), k, F.md5).alias(f"h{k}")
-            for k in range(_PR_K)
-        ],
-    )
+    # the exact-truth side needs each doc's token set beside its
+    # signature: join it back on doc_id (the 6.25% sample only)
+    sigs = minhash_signatures(toks, _PR_K, "md5").join(toks, "doc_id")
     a = sigs.select(
         F.col("doc_id").alias("doc_a"),
         F.col("toks").alias("ta"),

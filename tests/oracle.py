@@ -10,9 +10,12 @@ expected to round on BOTH sides so values are bit-identical
 
 from __future__ import annotations
 
+import atexit
 import datetime as _dt
 import math
 import os
+import shutil
+import tempfile
 
 import duckdb
 import numpy as np
@@ -33,8 +36,21 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_T2", "/root/testdata/sf0.01")
 
 
+_SCRATCH: list[str] = []
+
+
+def scratch_connect() -> duckdb.DuckDBPyConnection:
+    """An in-memory DuckDB connection that spills to a per-process
+    scratch directory, removed at exit. Left to itself an in-memory
+    connection spills to ``.tmp/`` under the working directory."""
+    if not _SCRATCH:
+        _SCRATCH.append(tempfile.mkdtemp(prefix="duckdb-oracle-"))
+        atexit.register(shutil.rmtree, _SCRATCH[0], True)
+    return duckdb.connect(config={"temp_directory": _SCRATCH[0]})
+
+
 def duckdb_connect(sf_dir: str = DEFAULT_SF_DIR) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
+    con = scratch_connect()
     for t in TABLES:
         con.execute(
             f"CREATE OR REPLACE VIEW {t} AS "

@@ -556,18 +556,26 @@ def test_candidate_budget_guard(spark, monkeypatch):
     bands = D.minhash_bands(D.token_arrays(docs))
     unguarded = set(map(tuple, D.band_candidates(bands).collect()))
 
-    # (a) healthy corpus under a big budget: untriggered, bit-identical
+    # (a) healthy corpus under a big budget: untriggered, bit-identical,
+    # and the document counter is never called within budget
     info: dict = {}
+    counted: list[int] = []
+
+    def count_docs() -> int:
+        counted.append(1)
+        return m + extra
+
     got = set(
         map(
             tuple,
             D.band_candidates(
-                bands, candidate_budget=10**9, guard_info=info
+                bands, candidate_budget=10**9, guard_info=info, n_docs=count_docs
             ).collect(),
         )
     )
     assert got == unguarded
     assert info["triggered"] is False
+    assert counted == [], "a within-budget guard must not count documents"
     # the template family is hot in every band: 16 buckets × C(60,2)
     assert info["total_pairs"] >= D._BANDS * m * (m - 1) // 2
 
@@ -604,11 +612,12 @@ def test_candidate_budget_guard(spark, monkeypatch):
                 bands,
                 candidate_budget=budget,
                 guard_info=info3,
-                n_docs=m + extra,
+                n_docs=count_docs,
             ).collect(),
         )
     )
     assert info3["triggered"] is False and info3.get("dense_corpus") is True
+    assert counted == [1], "an over-budget guard counts documents once"
     assert got3 == unguarded
 
     # (d) infeasible: the top-K collect cap can't reach the budget →
@@ -770,7 +779,7 @@ def test_minhash_signatures_computed_once(spark):
     once: the guard's width profile fills the local-checkpointed band
     relation and the candidate join reads it back. So the executed
     result plan scans that checkpointed RDD and holds no signature
-    expression (array_min over the token array) — `documents` is
+    aggregate (the per-doc min of the 32 hashes) — `documents` is
     scanned again only for the verify tier's hashed token arrays."""
     import contextlib
     import io
@@ -786,17 +795,17 @@ def test_minhash_signatures_computed_once(spark):
     p = buf.getvalue()
     assert "== Final Plan ==" in p  # the executed plan, not a pre-run one
     assert "Scan ExistingRDD" in p and "localCheckpoint" in p
-    assert "array_min" not in p
+    assert "partial_min" not in p and "concat(0:" not in p
 
 
 def test_minhash_family_is_literal_seeded(spark):
     """Pin the signature hash families to their documented literal-seed
-    definitions. Guards the PySpark transform() arity trap: a lambda
-    with a defaulted second parameter is silently treated as
-    (element, index) — the seed becomes the index Column's repr, a
-    session-counter-dependent accident instead of the stated family
-    (found and fixed in round 6; the md5 estimator family is replayed
-    here in pure Python, byte for byte)."""
+    definitions: position k is the min over the doc's distinct tokens
+    of h('k:' || token), replayed here in pure Python for the md5
+    family, byte for byte. A seed that depends on anything but k (an
+    earlier lambda-based builder once seeded it with a Column's repr, a
+    session-counter-dependent accident) fails the value or the
+    two-build stability check."""
     import hashlib
 
     from pyspark.sql import functions as F
@@ -813,11 +822,10 @@ def test_minhash_family_is_literal_seeded(spark):
     # the certificate md5 family, through the engine's own builder:
     # h_k = min over tokens of md5("k:tok")
     tok_arr = D.token_arrays(docs)
-    got = tok_arr.select(
-        D.minhash_position(F.col("toks"), 3, F.md5).alias("h3")
-    ).collect()[0]["h3"]
+    sig = D.minhash_signatures(tok_arr, 4, "md5").collect()[0]
     want = min(hashlib.md5(f"3:{t}".encode()).hexdigest() for t in toks)
-    assert got == want
+    assert sig["h3"] == want
+    assert sig["n"] == len(toks)
 
     # the banding family must be invocation-stable: two builds in one
     # session yield identical band keys (the repr-seeded accident was

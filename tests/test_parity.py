@@ -114,7 +114,7 @@ def test_skew_audit_empty_input_matches_oracle(spark, tmp_path):
     table dq_skew_audit must still emit exactly one all-NULL row, like
     its oracle's windowed aggregate — the earlier crossJoin against an
     empty p99 relation silently dropped the totals row (0 rows vs 1)."""
-    import duckdb
+    from oracle import scratch_connect
 
     from flume_hive_batch_sink_spark.io import load
 
@@ -125,7 +125,7 @@ def test_skew_audit_empty_input_matches_oracle(spark, tmp_path):
     rows = registry.QUERIES["dq_skew_audit"](spark, empty_dir).collect()
     assert len(rows) == 1 and all(v is None for v in rows[0])
 
-    con = duckdb.connect()
+    con = scratch_connect()
     try:
         con.execute(
             "CREATE VIEW events AS SELECT * FROM "

@@ -179,17 +179,23 @@ def test_bucketed_join_pays_write_once_across_calls(spark):
     assert listing() == before
 
 
-@pytest.mark.parametrize("family", ["production", "certificate"])
-def test_minhash_signature_stage_is_map_side(spark, family):
-    """The MinHash signature + banding stage must compile with ZERO
-    Exchange: scan → project (array_min/transform, an interpreted
-    CodegenFallback HOF in Spark 4.1) → posexplode.
-    This is the property that makes signatures free at 100 TB — they
-    ride along the initial scan; the first shuffle in the dedup pipeline
-    is the band-bucket join, never signature computation. Holds for the
-    production (xxhash64) and the certificate (md5) family alike."""
-    from pyspark.sql import functions as F
+def _node(p: str, i: int) -> str:
+    """The detail section of node ``(i)`` in a formatted plan."""
+    return p.split(f"\n({i}) ", 1)[1].split("\n\n", 1)[0]
 
+
+@pytest.mark.parametrize("family", ["production", "certificate"])
+def test_minhash_signature_stage_is_one_partial_aggregate(spark, family):
+    """The MinHash signature + banding stage compiles to code-generated
+    expressions: the tokens explode once (Generate), the per-position
+    minima are a partial aggregate (partial_min) right below the
+    stage's ONE Exchange, hash-partitioned on doc_id — so one row of
+    k hashes per doc crosses it — and no higher-order function
+    (lambdafunction / transform: CodegenFallback in Spark 4.1, run
+    interpreted per token) is left in the plan. Holds for the
+    production (xxhash64) and the certificate (md5) family alike; the
+    md5 minima are strings, which have no fixed-width aggregation
+    buffer, so that family's partial aggregate is a SortAggregate."""
     from flume_hive_batch_sink_spark.llm import dedup
 
     tok = dedup.token_arrays(load(spark, SF_DIR, "documents"))
@@ -197,11 +203,58 @@ def test_minhash_signature_stage_is_map_side(spark, family):
         bands = dedup.minhash_bands(tok)
     else:
         bands = dedup.minhash_bands(
-            tok, dedup._PR_BANDS, dedup._PR_ROWS, F.md5, dedup._md5_band_key
+            tok, dedup._PR_BANDS, dedup._PR_ROWS, "md5", dedup._md5_band_key
         )
     p = plan(bands)
-    assert "Exchange" not in p
-    assert "Generate" in p  # the posexplode is there — right plan, not a stub
+    assert "lambdafunction" not in p and "transform" not in p
+    exchanges = [int(i) for i in re.findall(r"^\((\d+)\) Exchange$", p, re.M)]
+    assert len(exchanges) == 1
+    ex = exchanges[0]
+    assert "Arguments: hashpartitioning(doc_id#" in _node(p, ex)
+    below = _node(p, ex - 1)
+    agg = "HashAggregate" if family == "production" else "SortAggregate"
+    assert below.startswith(agg) and "partial_min(" in below
+    assert "Generate" in p  # the explode and posexplode are there
+
+
+def test_band_candidates_fanout_sized_by_guard(spark, monkeypatch):
+    """The pair join's and the pair dedup's explicit repartitions run
+    ⌈kept_pairs / _PAIRS_PER_TASK⌉ tasks when the candidate guard has
+    measured the slot count (capped at the session's shuffle
+    partitions, recorded as ``fanout_partitions``), and the session's
+    shuffle partitions when the guard is off."""
+    from math import ceil
+
+    from flume_hive_batch_sink_spark.llm import dedup as D
+    from flume_hive_batch_sink_spark.partitioning import shuffle_parallelism
+
+    rows = [(i, "the same template text repeated verbatim") for i in range(40)]
+    rows += [(100 + i, f"unique doc {i} alpha{i} beta{i}") for i in range(10)]
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    bands = D.minhash_bands(D.token_arrays(docs))
+    shuffle = shuffle_parallelism(bands)
+    assert shuffle > 1
+
+    def fanout(candidates) -> set[int]:
+        args = re.findall(r"^Arguments: (.*), REPARTITION_BY_NUM", plan(candidates), re.M)
+        assert len(args) >= 2, "the band and the pair repartitions"
+        return {1 if a == "SinglePartition" else int(a.rsplit(", ", 1)[1][:-1]) for a in args}
+
+    info: dict = {}
+    guarded = D.band_candidates(bands, candidate_budget=10**9, guard_info=info)
+    kept = info["kept_pairs"]
+    assert 0 < kept <= D._PAIRS_PER_TASK
+    assert info["fanout_partitions"] == 1
+    assert fanout(guarded) == {1}
+
+    # a smaller slots-per-task constant gives a proportionally wider fan-out
+    monkeypatch.setattr(D, "_PAIRS_PER_TASK", kept // 3)
+    info = {}
+    want = min(shuffle, ceil(kept / (kept // 3)))
+    assert fanout(D.band_candidates(bands, candidate_budget=10**9, guard_info=info)) == {want}
+    assert info["fanout_partitions"] == want > 1
+
+    assert fanout(D.band_candidates(bands, candidate_budget=None)) == {shuffle}
 
 
 def test_spread_to_cores_fills_default_parallelism(spark):

@@ -284,9 +284,9 @@ def test_dup_clusters_deep_chain_takes_handoff(spark, tmp_path):
     8 propagation rounds cannot converge and the operator must take the
     star handoff on its own. Ground truth: one cluster rooted at doc 0,
     and the recursive-CTE closure oracle agrees on the same corpus."""
-    import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from oracle import scratch_connect
 
     from flume_hive_batch_sink_spark.llm import clusters
 
@@ -310,7 +310,7 @@ def test_dup_clusters_deep_chain_takes_handoff(spark, tmp_path):
     assert clusters._COUNTERS["star_handoff"] == before + 1
     assert got == {i: 0 for i in range(n)}
 
-    con = duckdb.connect()
+    con = scratch_connect()
     try:
         con.execute(
             "CREATE VIEW documents AS SELECT * FROM "
